@@ -55,7 +55,6 @@ REPS = int(os.environ.get("CCSPARK_BENCH_REPS", "2"))
 ROUNDS = int(os.environ.get("CCSPARK_BENCH_ROUNDS", "3"))
 BASE_CORES = int(os.environ.get("CCSPARK_BASE_CORES", str(max(1, CPUS // 16))))
 FULL_CORES = int(os.environ.get("CCSPARK_FULL_CORES", str(4 * BASE_CORES)))
-os.environ.setdefault("CCSPARK_DRIVER_MEM", "64g")
 
 HEADLINE = [
     "word_count", "sum_by_key", "topk_per_key", "discriminative_words",
@@ -1240,6 +1239,9 @@ def _write_bench_md(r: dict, t_base: float,
 
 
 if __name__ == "__main__":
+    # set here, not at import: tests import this module for its
+    # estimators, and a 64g default would size their session's heap
+    os.environ.setdefault("CCSPARK_DRIVER_MEM", "64g")
     if "--phase" in sys.argv:
         phase = sys.argv[sys.argv.index("--phase") + 1]
         if phase == "pipeline":

@@ -509,7 +509,7 @@ def feature_matrix(pdf: pd.DataFrame,
     (ProcessingService.java:595-689); dims via extractNumeric.
 
     im_host_lower: optionally the precomputed lowercase host of `url`
-    (the fused canon kernel already has it — skip re-extraction)."""
+    (canon_block already has it — skip re-extraction)."""
     n = len(pdf)
     f = np.zeros((n, 23), dtype=np.float64)
     url = pdf["url"].fillna("")
@@ -563,10 +563,9 @@ def priority_scores(pdf: pd.DataFrame,
 def canon_block(src: pd.Series, page: pd.Series, kind: pd.Series,
                 alt: pd.Series, parent_txt: pd.Series,
                 dom_depth: pd.Series, dom_sib: pd.Series) -> pd.DataFrame:
-    """Fused U1+U2+U3+U4-key+U11 batch kernel: ONE URL decomposition pass
-    shared by host, surt AND the priority same-domain feature (round 1
-    extracted the host up to four times per row across the chained
-    kernels). Returns columns url/host/surt/priority."""
+    """U1+U2+U3+U4-key+U11 batch kernel behind udfs.canon_batches: ONE
+    URL decomposition pass shared by host, surt AND the priority
+    same-domain feature. Returns columns url/host/surt/priority."""
     url = normalize_series(strip_whitespace(src), strip_whitespace(page))
     ms = url.map(_decomp_match)
     host = ms.map(lambda m: None if m is None else (m.group(1) or ""))

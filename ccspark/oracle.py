@@ -397,7 +397,7 @@ def run_oracle(documents_path: str, seeds_path: str, robots_path: str,
         # (params.politeness_ip_groups — mirrors politeness.ip_group_col:
         # md5('ip:'+host_key) first-15-hex mod n). The group delay is the
         # MAX of member-host delays over hosts present in the frontier
-        # (mirrors politeness.ip_group_delays).
+        # (mirrors politeness.group_delays).
         by_unit: dict = {}
         for c in res.frontier.values():
             if params.politeness_ip_groups is not None:

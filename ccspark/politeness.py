@@ -188,10 +188,6 @@ def group_delays(frontier: DataFrame, robots: DataFrame,
             .agg(F.max(_effective_delay(params, host_delays)).alias("_gd")))
 
 
-# back-compat name (r4 per-IP grouping landed first)
-ip_group_delays = group_delays
-
-
 def schedule_frontier(frontier: DataFrame, robots: DataFrame,
                       params: CrawlParams,
                       host_delays: DataFrame | None = None,

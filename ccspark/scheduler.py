@@ -5,7 +5,7 @@ Spark restatement of the reference's CommonCrawlAnalyzer pipeline
 its 500-file chunked sequential-job loop (AWSMediaExtractor.java:71-84),
 with one scheduling round =
 
-    candidates → canonicalize (Arrow UDFs) → robots admission →
+    candidates → canonicalize (one Arrow pass) → robots admission →
     first-wins dedup (batch window + bloom/exact seen anti-join) →
     priority total order → per-host politeness budget (salted top-K) →
     fetch-sim → discovery join → extract next candidates →
@@ -31,8 +31,7 @@ from .politeness import (order_cols, robots_admission_filter,
                          with_fetch_offsets)
 from .seen import SeenSet, with_bucket
 from .tables import SnapshotStore
-from .udfs import (canon_udf, dual_big_udf, host_udf, normalize_udf,
-                   priority_udf, surt_udf)
+from .udfs import CANON_FIELDS, canon_batches, dual_big_udf
 
 CANDIDATE_SCHEMA = T.StructType([
     T.StructField("url_raw", T.StringType()),
@@ -99,39 +98,14 @@ def seeds_to_candidates(seeds: DataFrame) -> DataFrame:
     )
 
 
-def canonicalize(candidates: DataFrame, round_no: int,
-                 fused: bool = False) -> DataFrame:
-    """U1-U4 + U11: normalize (drop malformed), host, host_key, surt,
-    priority, depth. Everything non-UDF is JVM.
-
-    Two physically different but result-identical UDF layouts (A/B'd in
-    BENCH.md):
-    - chained (default): four pandas UDF stages; Spark pipelines them, so
-      per task up to four Python workers overlap — fastest when cores are
-      not fully subscribed by task slots (local mode, spare cores).
-    - fused: one struct-returning Arrow kernel = one JVM↔Python exchange
-      per batch — fewer sockets/workers, the right shape when executors
-      are exactly sized (dense clusters) or socket syscalls are expensive.
-    """
-    if fused:
-        out = (candidates
-               .withColumn("_c", canon_udf(
-                   "url_raw", "page_url", "kind", "alt", "parent_txt",
-                   "dom_depth", "dom_sib"))
-               .select("*", "_c.url", "_c.host", "_c.surt", "_c.priority")
-               .drop("_c")
-               .filter(F.col("url").isNotNull())
-               .filter(F.col("host").isNotNull() & (F.col("host") != "")))
-    else:
-        out = (candidates
-               .withColumn("url", normalize_udf("url_raw", "page_url"))
-               .filter(F.col("url").isNotNull())
-               .withColumn("host", host_udf("url"))
-               .filter(F.col("host").isNotNull() & (F.col("host") != ""))
-               .withColumn("surt", surt_udf("url"))
-               .withColumn("priority", priority_udf(
-                   "url", "page_url", "kind", "alt", "parent_txt",
-                   "dom_depth", "dom_sib")))
+def canonicalize(candidates: DataFrame, round_no: int) -> DataFrame:
+    """U1-U4 + U11: normalize (drop malformed), host, surt, priority in
+    one mapInArrow pass (udfs.canon_batches), then host_key and depth
+    JVM-side. Rows with a null url or a null/empty host are dropped
+    inside that pass, so each row crosses into Python once and the
+    kernel runs once per row."""
+    out = candidates.mapInArrow(
+        canon_batches, T.StructType(candidates.schema.fields + CANON_FIELDS))
     return (out
             # case-sensitive www-strip (ProcessingService.java:403-405), then
             # lowercase for robots/politeness grouping
@@ -153,21 +127,21 @@ def batch_dedup(candidates: DataFrame) -> DataFrame:
 class CrawlEngine:
     def __init__(self, spark: SparkSession, state_dir: str, documents_path: str,
                  seeds_path: str, robots_path: str,
-                 params: CrawlParams = CrawlParams(), use_bloom: bool = True,
-                 bits_per_bucket: int = 1 << 20,
-                 filter_kind: str | None = None, cuckoo_buckets: int = 1 << 14,
+                 params: CrawlParams = CrawlParams(),
+                 filter_kind: str | None = "bloom",
+                 bits_per_bucket: int = 1 << 20, cuckoo_buckets: int = 1 << 14,
                  sitemaps_path: str | None = None):
         """filter_kind selects the URL-seen accelerator per the
-        north_rule's 'bloom/cuckoo': None → 'bloom' when use_bloom (the
-        default), or 'cuckoo' for the deletable-filter backend (recrawl
-        via SeenSet.remove)."""
+        north_rule's 'bloom/cuckoo': 'bloom' (the default), 'cuckoo' for
+        the deletable-filter backend (recrawl via SeenSet.remove), or
+        None for the exact anti-join alone."""
         self.spark = spark
         self.params = params
         self.documents_path = documents_path
         self.store = SnapshotStore(spark, state_dir)
         self.seen = SeenSet(self.store, partitions=params.seen_partitions,
-                            use_bloom=use_bloom, bits_per_bucket=bits_per_bucket,
-                            filter_kind=filter_kind, cuckoo_buckets=cuckoo_buckets)
+                            filter_kind=filter_kind, bits_per_bucket=bits_per_bucket,
+                            cuckoo_buckets=cuckoo_buckets)
         # a prior run may have evolved the layout (rebucket): the
         # persisted spec of record overrides the constructor default.
         # UNCONDITIONAL — a store whose layout already evolved must be

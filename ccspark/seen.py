@@ -59,14 +59,12 @@ FILTER_SCHEMA = T.StructType([
     T.StructField("bitmap", T.BinaryType()),
     T.StructField("n", T.LongType()),
 ])
-BLOOM_SCHEMA = FILTER_SCHEMA  # back-compat name
 
 # persisted rows additionally carry the snapshot version that wrote them
 # (latest-bucket-wins on read), so each round commits ONLY the buckets
 # that received new URLs as a delta instead of rewriting every blob
 FILTER_ROW_SCHEMA = T.StructType(
     FILTER_SCHEMA.fields + [T.StructField("v", T.LongType())])
-BLOOM_ROW_SCHEMA = FILTER_ROW_SCHEMA  # back-compat name
 
 
 def _bit_positions(urls: pd.Series, m_bits: int, k: int) -> np.ndarray:
@@ -125,28 +123,24 @@ def with_bucket(df: DataFrame, url_col: str = "url", partitions: int = 256) -> D
 
 class SeenSet:
     def __init__(self, store: SnapshotStore, partitions: int = 256,
-                 use_bloom: bool = True, bits_per_bucket: int = 1 << 20,
-                 num_hashes: int = 7, filter_kind: str | None = None,
+                 filter_kind: str | None = "bloom",
+                 bits_per_bucket: int = 1 << 20, num_hashes: int = 7,
                  cuckoo_buckets: int = 1 << 14):
-        """filter_kind: 'bloom' (default when use_bloom), 'cuckoo', or
-        None (exact anti-join only). cuckoo_buckets × 4 slots is the
+        """filter_kind: 'bloom' (default), 'cuckoo', or None (exact
+        anti-join only). cuckoo_buckets × 4 slots is the
         per-partition capacity — size ≥ expected keys/partition / 0.84
         (the b=4 high-load bound) rounded up to a power of two."""
         self.store = store
         self.spark = store.spark
         self.partitions = partitions
-        if filter_kind is None:
-            filter_kind = "bloom" if use_bloom else None
         assert filter_kind in (None, "bloom", "cuckoo")
         self.kind = filter_kind
-        self.use_bloom = filter_kind is not None  # back-compat meaning: accelerated
         self.m = bits_per_bucket
         self.k = num_hashes
         self.nbuck = cuckoo_buckets
         self.seen_tbl = store.table("seen")
         self.filter_name = filter_kind or "bloom"
         self.filter_tbl = store.table(self.filter_name)
-        self.bloom_tbl = self.filter_tbl  # back-compat alias
         # constructor-time layout, the fallback when no persisted spec
         # survives (rederive_spec after a rollback discards any spec
         # adopted from a since-rolled-back rebucket snapshot)
@@ -264,8 +258,6 @@ class SeenSet:
                      F.max("v").alias("v"))
                 .select("bucket", "_b.bitmap", "_b.n", "v"))
 
-    _bloom_df = _filter_df  # back-compat alias
-
     def compact_filter(self, round_no: int) -> int | None:
         """Materialize the resolved per-bucket state as a 'full' snapshot
         so the latest-bucket-wins chain stays bounded (the filter twin of
@@ -276,8 +268,6 @@ class SeenSet:
         return self.filter_tbl.commit(
             resolved, round_no, kind="full",
             repartition=(min(self.partitions, 64), "bucket"))
-
-    compact_bloom = compact_filter  # back-compat alias
 
     # -- vectorized per-bucket kernels ---------------------------------------
     # module-level _probe_blob/_fold_blob/_delete_blob are parameterized by

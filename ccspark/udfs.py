@@ -1,30 +1,58 @@
-"""Vectorized pandas/Arrow UDF wrappers over ccspark.kernels.
+"""Vectorized Arrow/pandas UDF wrappers over ccspark.kernels.
 
 These are the ONLY Python touch-points in the engine's hot path
 (input_hint mandate: vectorized pandas/Arrow UDFs, no per-row Python).
 Everything else — filters, explodes, joins, windows, aggregations — is
 JVM-side DataFrame API under whole-stage codegen.
+
+URL canonicalization (U1-U4 + U11) is one `mapInArrow` pass,
+`canon_batches`: each row crosses the JVM↔Python boundary once, the
+kernel runs once per row, and malformed rows are dropped in the same
+pass, so no JVM filter sits above a UDF for the optimizer to re-evaluate
+it below.
 """
 
 from __future__ import annotations
 
+from typing import Iterator
+
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import functions as F, types as T
+from pyspark.sql.pandas.types import to_arrow_type
 
 from . import kernels as K
 
+#: candidate columns canon_batches reads, in kernels.canon_block order
+CANON_INPUTS = ("url_raw", "page_url", "kind", "alt", "parent_txt",
+                "dom_depth", "dom_sib")
 
-@F.pandas_udf(T.StringType())
-def strip_ws_udf(s: pd.Series) -> pd.Series:
-    return K.strip_whitespace(s)
+#: columns canon_batches appends to every batch
+CANON_FIELDS = [
+    T.StructField("url", T.StringType()),
+    T.StructField("host", T.StringType()),
+    T.StructField("surt", T.StringType()),
+    T.StructField("priority", T.DoubleType()),
+]
 
 
-@F.pandas_udf(T.StringType())
-def normalize_udf(src: pd.Series, page: pd.Series) -> pd.Series:
-    """U1+U2: whitespace strip then the reference's exact relative-URL
-    reconstruction (ProcessingService.java:170-171,436-474). Null out =
-    drop the row (malformed URL, ProcessingService.java:427-429)."""
-    return K.normalize_series(K.strip_whitespace(src), K.strip_whitespace(page))
+def canon_batches(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+    """mapInArrow body for U1+U2+U3+U4-key+U11: the seven CANON_INPUTS
+    columns go through kernels.canon_block; url/host/surt/priority are
+    appended to the batch and rows with a null url (malformed,
+    ProcessingService.java:427-429) or a null/empty host are dropped.
+    Pass-through columns stay Arrow — a pandas round trip would turn
+    nullable integers (event_ms, hop) into float64."""
+    for b in batches:
+        c = K.canon_block(*(b.column(n).to_pandas() for n in CANON_INPUTS))
+        keep = (c["url"].notna() & c["host"].notna()
+                & (c["host"] != "")).to_numpy()
+        out = b.filter(keep)
+        for f in CANON_FIELDS:
+            out = out.append_column(f.name, pa.array(
+                c[f.name][keep], type=to_arrow_type(f.dataType),
+                from_pandas=True))
+        yield out
 
 
 @F.pandas_udf(T.StringType())
@@ -33,58 +61,8 @@ def host_udf(urls: pd.Series) -> pd.Series:
     return K.hosts_of(urls)
 
 
-@F.pandas_udf(T.StringType())
-def surt_udf(urls: pd.Series) -> pd.Series:
-    """U4 extension: SURT-style total-order key."""
-    return K.surt_series(urls)
-
-
-@F.pandas_udf(T.DoubleType())
-def priority_udf(url: pd.Series, page_url: pd.Series, kind: pd.Series,
-                 alt: pd.Series, parent_txt: pd.Series,
-                 dom_depth: pd.Series, dom_sib: pd.Series) -> pd.Series:
-    """U11: deterministic priority over the reference's 23 features
-    (ProcessingService.java:595-689), fixed weights replacing the RFs."""
-    pdf = pd.DataFrame({
-        "url": url, "page_url": page_url, "kind": kind, "alt": alt,
-        "parent_txt": parent_txt, "dom_depth": dom_depth, "dom_sib": dom_sib,
-    })
-    return K.priority_scores(pdf)
-
-
-@F.pandas_udf(T.ArrayType(T.StringType()))
-def url_ngrams_udf(urls: pd.Series) -> pd.Series:
-    """X5: char n-grams of the URL (Lucene NGramTokenizer port),
-    sorted for determinism."""
-    return urls.fillna("").map(lambda u: sorted(K.url_ngrams_one(u)))
-
-
 @F.pandas_udf(T.BooleanType())
 def dual_big_udf(urls: pd.Series, priorities: pd.Series) -> pd.Series:
     """Dual-model arbitration (ProcessingService.java:200-222): n-gram
     scorer vs the 23-feature priority, agreement else margin rule."""
     return K.dual_model_big_batch(urls, priorities)
-
-
-CANON_SCHEMA = T.StructType([
-    T.StructField("url", T.StringType()),
-    T.StructField("host", T.StringType()),
-    T.StructField("surt", T.StringType()),
-    T.StructField("priority", T.DoubleType()),
-])
-
-
-@F.pandas_udf(CANON_SCHEMA)
-def canon_udf(src: pd.Series, page: pd.Series, kind: pd.Series,
-              alt: pd.Series, parent_txt: pd.Series,
-              dom_depth: pd.Series, dom_sib: pd.Series) -> pd.DataFrame:
-    """Fused U1+U2+U3+U4-key+U11 kernel: ONE Arrow exchange per batch
-    instead of four chained pandas UDFs, and one URL decomposition pass
-    shared by host/surt/priority (kernels.canon_block). Fusing matters
-    doubly: it quarters the JVM↔Python socket round-trips (expensive
-    under syscall-intercepting sandboxes and on real clusters alike) and
-    one worker per task slot keeps total processes == cores — the chained
-    layout runs 4 workers per slot, which oversubscribes exactly-sized
-    executors. Output struct is exploded JVM-side; rows with null
-    url/host are dropped there."""
-    return K.canon_block(src, page, kind, alt, parent_txt, dom_depth, dom_sib)

@@ -77,7 +77,7 @@ def main():
 
     eng = CrawlEngine(spark, os.path.join(WORK, "state"), fx["documents"],
                       fx["seeds"], fx["robots"], params=PARAMS,
-                      sitemaps_path=fx["sitemaps"], use_bloom=False)
+                      sitemaps_path=fx["sitemaps"], filter_kind=None)
     walls, metrics = [], []
     # drive round by round so walls are per-round (mirrors run())
     from ccspark.scheduler import seeds_to_candidates

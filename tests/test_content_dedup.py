@@ -43,7 +43,7 @@ def engine(spark, fx_small, mirrored_docs, tmp_path_factory):
     tmp = tmp_path_factory.mktemp("cd_state")
     eng = CrawlEngine(spark, str(tmp / "s"), mirrored_docs,
                       fx_small["seeds"], fx_small["robots"], params=PARAMS,
-                      use_bloom=False)
+                      filter_kind=None)
     metrics = eng.run()
     return eng, metrics
 
@@ -103,7 +103,7 @@ def test_off_by_default(engine, fx_small, mirrored_docs, tmp_path_factory,
     tmp = tmp_path_factory.mktemp("cd_off")
     eng = CrawlEngine(spark, str(tmp / "s"), mirrored_docs,
                       fx_small["seeds"], fx_small["robots"],
-                      params=CrawlParams(rounds=2), use_bloom=False)
+                      params=CrawlParams(rounds=2), filter_kind=None)
     metrics = eng.run()
     assert all("content_dups" not in m for m in metrics)
     assert not eng.digests_tbl.exists()

@@ -43,7 +43,7 @@ class TestEngineMatchesOracle:
     @pytest.fixture(scope="class")
     def engine(self, spark, fx_small, tmp_path_factory):
         tmp = tmp_path_factory.mktemp("state")
-        return _run_engine(spark, fx_small, tmp, "exact", use_bloom=False)
+        return _run_engine(spark, fx_small, tmp, "exact", filter_kind=None)
 
     def test_scheduled_ordering_exact(self, engine, oracle_small):
         eng, _ = engine
@@ -93,7 +93,7 @@ class TestBloomEquivalence:
     def test_bloom_accelerated_run_identical(self, spark, fx_small, tmp_path,
                                              oracle_small):
         eng, metrics = _run_engine(spark, fx_small, tmp_path, "bloom",
-                                   use_bloom=True, bits_per_bucket=1 << 14)
+                                   filter_kind="bloom", bits_per_bucket=1 << 14)
         got = _scheduled_lists(eng)
         for r, want in enumerate(oracle_small.scheduled):
             assert got.get(r, []) == [(c["url"], c["priority"]) for c in want]
@@ -109,14 +109,14 @@ class TestBloomEquivalence:
         from ccspark.tables import SnapshotStore
 
         store = SnapshotStore(spark, str(tmp_path / "st"))
-        seen = SeenSet(store, partitions=8, use_bloom=True,
+        seen = SeenSet(store, partitions=8, filter_kind="bloom",
                        bits_per_bucket=1 << 12)
         urls0 = spark.createDataFrame(
             [(f"http://h/{i}",) for i in range(64)], "url string")
         seen.add(with_bucket(urls0, partitions=8), 0)
-        v1 = seen.bloom_tbl.latest_version()
-        v1_files = seen.bloom_tbl.meta(v1)["files"]
-        n_buckets_v1 = seen.bloom_tbl.read(v1).count()
+        v1 = seen.filter_tbl.latest_version()
+        v1_files = seen.filter_tbl.meta(v1)["files"]
+        n_buckets_v1 = seen.filter_tbl.read(v1).count()
         assert n_buckets_v1 > 1  # 64 urls spread over several buckets
 
         one = with_bucket(spark.createDataFrame(
@@ -124,13 +124,13 @@ class TestBloomEquivalence:
         new = seen.filter_new(one)
         assert new.count() == 1
         seen.add(new, 1)
-        v2 = seen.bloom_tbl.latest_version()
+        v2 = seen.filter_tbl.latest_version()
         # the delta snapshot holds exactly the one touched bucket …
-        assert seen.bloom_tbl.read(v2).count() == 1
+        assert seen.filter_tbl.read(v2).count() == 1
         # … the earlier snapshot's manifest (and files) are untouched …
-        assert seen.bloom_tbl.meta(v1)["files"] == v1_files
+        assert seen.filter_tbl.meta(v1)["files"] == v1_files
         # … and the resolved state is still the union: nothing re-admits
-        resolved = {r.bucket: r.n for r in seen._bloom_df().collect()}
+        resolved = {r.bucket: r.n for r in seen._filter_df().collect()}
         assert sum(resolved.values()) == 65
         both = urls0.union(spark.createDataFrame(
             [("http://h/brand-new-url",)], "url string"))
@@ -142,22 +142,22 @@ class TestBloomEquivalence:
         from ccspark.tables import SnapshotStore
 
         store = SnapshotStore(spark, str(tmp_path / "stc"))
-        seen = SeenSet(store, partitions=4, use_bloom=True,
+        seen = SeenSet(store, partitions=4, filter_kind="bloom",
                        bits_per_bucket=1 << 12)
         for r in range(3):
             urls = spark.createDataFrame(
                 [(f"http://h/r{r}/{i}",) for i in range(20)], "url string")
             seen.add(seen.filter_new(with_bucket(urls, partitions=4)), r)
         before = {r.bucket: (r.bitmap, r.n)
-                  for r in seen._bloom_df().collect()}
-        seen.compact_bloom(2)
+                  for r in seen._filter_df().collect()}
+        seen.compact_filter(2)
         after = {r.bucket: (r.bitmap, r.n)
-                 for r in seen._bloom_df().collect()}
+                 for r in seen._filter_df().collect()}
         assert before == after
         # post-compaction the chain read touches ONE snapshot (the full)
-        last = seen.bloom_tbl.latest_version()
-        assert seen.bloom_tbl.meta(last)["kind"] == "full"
-        assert seen.bloom_tbl.read_chain().count() == len(before)
+        last = seen.filter_tbl.latest_version()
+        assert seen.filter_tbl.meta(last)["kind"] == "full"
+        assert seen.filter_tbl.read_chain().count() == len(before)
 
 
 class TestResume:
@@ -403,7 +403,7 @@ class TestRecrawlPolicy:
 
     @pytest.mark.parametrize("kw", [
         {"filter_kind": "cuckoo", "cuckoo_buckets": 1 << 8},
-        {"use_bloom": True, "bits_per_bucket": 1 << 14},
+        {"filter_kind": "bloom", "bits_per_bucket": 1 << 14},
     ], ids=["cuckoo", "bloom"])
     def test_recrawl_run_matches_oracle(self, spark, fx_small, tmp_path,
                                         oracle_recrawl, kw):

@@ -176,8 +176,8 @@ class TestRecrawlRemove:
 
     @pytest.mark.parametrize("kw", [
         {"filter_kind": "cuckoo", "cuckoo_buckets": 1 << 8},
-        {"use_bloom": True, "bits_per_bucket": 1 << 12},
-        {"use_bloom": False},
+        {"filter_kind": "bloom", "bits_per_bucket": 1 << 12},
+        {"filter_kind": None},
     ], ids=["cuckoo", "bloom-rebuild", "exact-only"])
     def test_removed_urls_are_readmitted(self, spark, tmp_path, kw):
         seen, urls = self._mk(spark, tmp_path, **kw)
@@ -198,7 +198,7 @@ class TestRecrawlRemove:
         resurrect the stale bits and block the recrawl's exact re-add
         fast path forever."""
         store = SnapshotStore(spark, str(tmp_path / "st"))
-        seen = SeenSet(store, partitions=4, use_bloom=True,
+        seen = SeenSet(store, partitions=4, filter_kind="bloom",
                        bits_per_bucket=1 << 12)
         urls = spark.createDataFrame(
             [(f"http://only.com/{i}",) for i in range(12)], "url string")
@@ -281,7 +281,7 @@ class TestTombstoneRemove:
 
     @pytest.mark.parametrize("kw", [
         {"filter_kind": "cuckoo", "cuckoo_buckets": 1 << 8},
-        {"use_bloom": True, "bits_per_bucket": 1 << 12},
+        {"filter_kind": "bloom", "bits_per_bucket": 1 << 12},
     ], ids=["cuckoo", "bloom"])
     def test_compact_seen_materializes_resolved_set(self, spark, tmp_path, kw):
         seen, urls = self._seed(spark, tmp_path, **kw)

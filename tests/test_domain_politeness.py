@@ -23,7 +23,7 @@ def engine(spark, fx_small, tmp_path_factory):
     tmp = tmp_path_factory.mktemp("dom_state")
     eng = CrawlEngine(spark, str(tmp / "s"), fx_small["documents"],
                       fx_small["seeds"], fx_small["robots"], params=PARAMS,
-                      use_bloom=False)
+                      filter_kind=None)
     metrics = eng.run()
     return eng, metrics
 
@@ -85,6 +85,6 @@ def test_exclusive_with_ip_grouping(fx_small, tmp_path_factory, spark):
                       fx_small["seeds"], fx_small["robots"],
                       params=CrawlParams(rounds=1, politeness_by_domain=True,
                                          politeness_ip_groups=4),
-                      use_bloom=False)
+                      filter_kind=None)
     with pytest.raises(AssertionError):
         eng.run()

@@ -26,7 +26,7 @@ def engine(spark, fx_small, tmp_path_factory):
     tmp = tmp_path_factory.mktemp("dual_state")
     eng = CrawlEngine(spark, str(tmp / "s"), fx_small["documents"],
                       fx_small["seeds"], fx_small["robots"], params=PARAMS,
-                      use_bloom=False)
+                      filter_kind=None)
     metrics = eng.run()
     return eng, metrics
 
@@ -115,7 +115,7 @@ class TestEnginePyoracleParity:
                              max_scheduled_per_round=25)
         eng = CrawlEngine(spark, str(tmp_path / "s"), fx_small["documents"],
                           fx_small["seeds"], fx_small["robots"],
-                          params=params, use_bloom=False)
+                          params=params, filter_kind=None)
         eng.run()
         want = run_oracle(fx_small["documents"], fx_small["seeds"],
                           fx_small["robots"], params)

@@ -23,7 +23,7 @@ def engine(spark, fx_medium, tmp_path_factory):
                       # a cap keeps a healthy frontier backlog to export
                       params=CrawlParams(rounds=2,
                                          max_scheduled_per_round=20),
-                      use_bloom=False)
+                      filter_kind=None)
     eng.run()
     return eng
 

@@ -24,7 +24,7 @@ def engine(spark, fx_small, tmp_path_factory):
     tmp = tmp_path_factory.mktemp("quota_state")
     eng = CrawlEngine(spark, str(tmp / "s"), fx_small["documents"],
                       fx_small["seeds"], fx_small["robots"], params=PARAMS,
-                      use_bloom=False)
+                      filter_kind=None)
     metrics = eng.run()
     return eng, metrics
 
@@ -82,6 +82,6 @@ def test_off_by_default(engine, fx_small, tmp_path_factory, spark):
     tmp = tmp_path_factory.mktemp("quota_off")
     eng = CrawlEngine(spark, str(tmp / "s"), fx_small["documents"],
                       fx_small["seeds"], fx_small["robots"],
-                      params=CrawlParams(rounds=2), use_bloom=False)
+                      params=CrawlParams(rounds=2), filter_kind=None)
     metrics = eng.run()
     assert all("host_cap_dropped" not in m for m in metrics)

@@ -57,7 +57,7 @@ def engine(spark, fx_medium, tmp_path_factory):
     state = str(tmp_path_factory.mktemp("sink_state") / "s")
     eng = CrawlEngine(spark, state, fx_medium["documents"],
                       fx_medium["seeds"], fx_medium["robots"], params=PARAMS,
-                      sitemaps_path=fx_medium["sitemaps"], use_bloom=False)
+                      sitemaps_path=fx_medium["sitemaps"], filter_kind=None)
     metrics = eng.run()
     return eng, metrics, state
 
@@ -118,7 +118,7 @@ def test_resume_after_everything(engine, oracle, fx_medium, spark):
     p6 = dataclasses.replace(PARAMS, rounds=6)
     eng2 = CrawlEngine(spark, state, fx_medium["documents"],
                        fx_medium["seeds"], fx_medium["robots"], params=p6,
-                       sitemaps_path=fx_medium["sitemaps"], use_bloom=False)
+                       sitemaps_path=fx_medium["sitemaps"], filter_kind=None)
     eng2.run(resume=True)
     want = run_oracle(fx_medium["documents"], fx_medium["seeds"],
                       fx_medium["robots"], p6,

@@ -24,7 +24,7 @@ def engine(spark, fx_small, tmp_path_factory):
     tmp = tmp_path_factory.mktemp("mh_state")
     eng = CrawlEngine(spark, str(tmp / "s"), fx_small["documents"],
                       fx_small["seeds"], fx_small["robots"], params=PARAMS,
-                      use_bloom=False)
+                      filter_kind=None)
     metrics = eng.run()
     return eng, metrics
 
@@ -82,7 +82,7 @@ def test_max_hops_zero_is_seed_only(spark, fx_small, tmp_path_factory):
     eng = CrawlEngine(spark, str(tmp / "s"), fx_small["documents"],
                       fx_small["seeds"], fx_small["robots"],
                       params=CrawlParams(rounds=3, max_hops=0),
-                      use_bloom=False)
+                      filter_kind=None)
     eng.run()
     kinds = {r.kind for r in eng.scheduled_rounds().select("kind").collect()}
     assert kinds <= {"seed"}
@@ -99,7 +99,7 @@ def test_composes_with_redirects(spark, fx_small, tmp_path_factory):
     tmp = tmp_path_factory.mktemp("mh_rd")
     eng = CrawlEngine(spark, str(tmp / "s"), fx_small["documents"],
                       fx_small["seeds"], fx_small["robots"], params=p,
-                      use_bloom=False)
+                      filter_kind=None)
     metrics = eng.run()
     want = run_oracle(fx_small["documents"], fx_small["seeds"],
                       fx_small["robots"], p)
@@ -126,7 +126,7 @@ def test_off_by_default(spark, fx_small, tmp_path_factory):
     tmp = tmp_path_factory.mktemp("mh_off")
     eng = CrawlEngine(spark, str(tmp / "s"), fx_small["documents"],
                       fx_small["seeds"], fx_small["robots"],
-                      params=CrawlParams(rounds=2), use_bloom=False)
+                      params=CrawlParams(rounds=2), filter_kind=None)
     eng.run()
     assert "hop" not in eng.scheduled_rounds().columns
     assert "hop" not in eng.candidates_tbl.read_chain().columns

@@ -9,6 +9,8 @@ bug even when results stay correct.
 
 from __future__ import annotations
 
+import re
+
 import pytest
 
 from pyspark.sql import functions as F
@@ -97,6 +99,17 @@ class TestWindowOptimizations:
         from ccspark.scheduler import canonicalize
         p = phys(canonicalize(synthetic_candidates(spark, 1000), 0))
         assert "Exchange" not in p
+
+    def test_canonicalize_crosses_into_python_once(self, spark):
+        """One Python evaluation node: the kernel runs once per row and
+        the malformed-row filter is inside it, so the optimizer has no
+        JVM filter to push below a UDF and re-evaluate it there."""
+        from ccspark.benchflow import synthetic_candidates
+        from ccspark.scheduler import canonicalize
+        p = phys(canonicalize(synthetic_candidates(spark, 1000), 0))
+        py = re.findall(r"^[\s:+|-]*(?:\*\(\d+\) )?(\w*(?:EvalPython|InArrow|InPandas))\b",
+                        p, re.M)
+        assert len(py) == 1, f"{py}:\n{p}"
 
 
 class TestDedupPlans:

@@ -27,7 +27,7 @@ def engine(spark, fx_medium, tmp_path_factory):
     tmp = tmp_path_factory.mktemp("compose_state")
     eng = CrawlEngine(spark, str(tmp / "s"), fx_medium["documents"],
                       fx_medium["seeds"], fx_medium["robots"], params=PARAMS,
-                      use_bloom=False)
+                      filter_kind=None)
     metrics = eng.run()
     return eng, metrics
 

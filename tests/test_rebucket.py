@@ -21,8 +21,8 @@ def _urls(spark, lo, hi):
 
 KINDS = [
     {"filter_kind": "cuckoo", "cuckoo_buckets": 1 << 8},
-    {"use_bloom": True, "bits_per_bucket": 1 << 12},
-    {"use_bloom": False},
+    {"filter_kind": "bloom", "bits_per_bucket": 1 << 12},
+    {"filter_kind": None},
 ]
 
 
@@ -214,7 +214,7 @@ class TestRebucketProperty:
                                                   kind):
         kw = ({"filter_kind": "cuckoo", "cuckoo_buckets": 1 << 8}
               if kind == "cuckoo"
-              else {"use_bloom": True, "bits_per_bucket": 1 << 12})
+              else {"filter_kind": "bloom", "bits_per_bucket": 1 << 12})
         for i, (n, old_p, new_p) in enumerate(self.CASES):
             store = SnapshotStore(spark, str(tmp_path / f"st{kind}{i}"))
             seen = SeenSet(store, partitions=old_p, **kw)

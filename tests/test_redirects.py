@@ -24,7 +24,7 @@ def engine(spark, fx_small, tmp_path_factory):
     tmp = tmp_path_factory.mktemp("rd_state")
     eng = CrawlEngine(spark, str(tmp / "s"), fx_small["documents"],
                       fx_small["seeds"], fx_small["robots"], params=PARAMS,
-                      use_bloom=False)
+                      filter_kind=None)
     metrics = eng.run()
     return eng, metrics
 
@@ -102,7 +102,7 @@ def test_off_by_default(spark, fx_small, tmp_path_factory):
     tmp = tmp_path_factory.mktemp("rd_off")
     eng = CrawlEngine(spark, str(tmp / "s"), fx_small["documents"],
                       fx_small["seeds"], fx_small["robots"],
-                      params=CrawlParams(rounds=2), use_bloom=False)
+                      params=CrawlParams(rounds=2), filter_kind=None)
     eng.run()
     sched = eng.scheduled_rounds()
     assert "redirect_to" not in sched.columns

@@ -27,7 +27,7 @@ def engine(spark, fx_small, tmp_path_factory):
     tmp = tmp_path_factory.mktemp("rv_state")
     eng = CrawlEngine(spark, str(tmp / "s"), fx_small["documents"],
                       fx_small["seeds"], fx_small["robots"], params=PARAMS,
-                      use_bloom=False)
+                      filter_kind=None)
     metrics = eng.run()
     return eng, metrics
 
@@ -136,7 +136,7 @@ def test_all_policies_compose(spark, fx_small, tmp_path_factory):
     tmp = tmp_path_factory.mktemp("rv_all")
     eng = CrawlEngine(spark, str(tmp / "s"), fx_small["documents"],
                       fx_small["seeds"], fx_small["robots"], params=p,
-                      use_bloom=False)
+                      filter_kind=None)
     metrics = eng.run()
     want = run_oracle(fx_small["documents"], fx_small["seeds"],
                       fx_small["robots"], p)
@@ -163,7 +163,7 @@ def test_off_by_default(spark, fx_small, tmp_path_factory):
     tmp = tmp_path_factory.mktemp("rv_off")
     eng = CrawlEngine(spark, str(tmp / "s"), fx_small["documents"],
                       fx_small["seeds"], fx_small["robots"],
-                      params=CrawlParams(rounds=2), use_bloom=False)
+                      params=CrawlParams(rounds=2), filter_kind=None)
     eng.run()
     sched = eng.scheduled_rounds()
     assert sched.filter(F.col("status") == 304).count() == 0

@@ -176,7 +176,7 @@ def test_wildcard_blocking_e2e(spark, tmp_path):
     assert not any("/page10.html" in u for u in urls)
 
     eng = CrawlEngine(spark, str(tmp_path / "state"), fx["documents"],
-                      fx["seeds"], fx["robots"], params=p, use_bloom=False)
+                      fx["seeds"], fx["robots"], params=p, filter_kind=None)
     metrics = eng.run()
     assert metrics[0]["robots_blocked"] == 1
     got = [r.url for r in eng.scheduled_rounds().select("url").collect()]

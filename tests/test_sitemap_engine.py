@@ -22,7 +22,7 @@ def engine(spark, fx_small, tmp_path_factory):
     tmp = tmp_path_factory.mktemp("sm_state")
     eng = CrawlEngine(spark, str(tmp / "s"), fx_small["documents"],
                       fx_small["seeds"], fx_small["robots"], params=PARAMS,
-                      use_bloom=False, sitemaps_path=fx_small["sitemaps"])
+                      filter_kind=None, sitemaps_path=fx_small["sitemaps"])
     metrics = eng.run()
     return eng, metrics
 
@@ -75,7 +75,7 @@ def test_off_by_default(spark, fx_small, tmp_path_factory):
     tmp = tmp_path_factory.mktemp("sm_off")
     eng = CrawlEngine(spark, str(tmp / "s"), fx_small["documents"],
                       fx_small["seeds"], fx_small["robots"],
-                      params=CrawlParams(rounds=1), use_bloom=False,
+                      params=CrawlParams(rounds=1), filter_kind=None,
                       sitemaps_path=fx_small["sitemaps"])
     eng.run()
     assert (eng.scheduled_rounds()
