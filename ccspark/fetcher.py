@@ -3,8 +3,8 @@
 The reference fetches with a 100-thread pool and a global inter-fetch
 gate (ProcessingService.java:44-49,329-388). The Spark restatement runs
 the fetch INSIDE the scheduled partitions: rows arrive already grouped
-and budgeted per host (politeness.schedule_frontier) and stamped with a
-per-host start offset (with_fetch_offsets), so each partition replays
+and budgeted per host and stamped with a per-host start offset, both
+from one rank (politeness.schedule_frontier), so each partition replays
 its hosts' offsets locally — no cross-executor coordination, which is
 what lets the stage scale to 1000 executors.
 

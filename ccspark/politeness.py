@@ -119,17 +119,6 @@ def _join_delays(df: DataFrame, robots: DataFrame,
     return out
 
 
-def with_budget(df: DataFrame, robots: DataFrame, params: CrawlParams,
-                host_delays: DataFrame | None = None) -> DataFrame:
-    """Attach the per-host budget column from the robots cache (and the
-    adaptive host-delay table when politeness auto-tuning is on)."""
-    delay = _effective_delay(params, host_delays)
-    return (_join_delays(df, robots, host_delays)
-            .withColumn("budget",
-                        F.floor(F.lit(params.round_seconds) / delay).cast("int"))
-            .drop("_delay", "_ad_ms"))
-
-
 def ip_group_col(n_groups: int):
     """Deterministic host → address-group id (per-IP politeness): the
     sandbox DNS stand-in, md5('ip:' + host_key) first 15 hex digits mod
@@ -195,22 +184,31 @@ def schedule_frontier(frontier: DataFrame, robots: DataFrame,
                       pri_col: str = "priority") -> DataFrame:
     """Exact per-politeness-unit top-budget selection under the total
     order, salted for hot units. The unit is the host (default) or, when
-    `ip_delays` is given (params.politeness_ip_groups), the address
-    group — same two-phase salted window, different key. Returns the
-    scheduled rows (budget column dropped)."""
+    `ip_delays` is given (params.politeness_ip_groups /
+    politeness_by_domain), the group — same two-phase salted window,
+    different key. Returns the scheduled rows stamped with
+    `fetch_offset_ms` = rank-within-unit × effective delay(unit): the
+    explicit, per-unit form of the reference's inter-fetch interval
+    stamping (ProcessingService.java:235-240 lastDownLoadCall). Budget
+    and offset share one delay and one rank: the unit window's
+    row_number under the frontier total order. For groups the delay is
+    the FRONTIER-derived group max, not a max over the scheduled subset
+    (the slowest member may not have been scheduled)."""
     if ip_delays is not None:
         key = "_gk"
         fb = (frontier.withColumn("_gk", politeness_group_col(params))
-              .join(ip_delays, "_gk")
-              .withColumn("budget",
-                          F.floor(F.lit(params.round_seconds)
-                                  / F.col("_gd")).cast("int"))
-              .drop("_gd"))
+              .join(ip_delays, "_gk"))
     else:
         key = "host_key"
-        fb = with_budget(frontier, robots, params, host_delays)
+        # `_gd` on both paths: the unit's effective delay in seconds
+        fb = (_join_delays(frontier, robots, host_delays)
+              .withColumn("_gd", _effective_delay(params, host_delays))
+              .drop("_delay", "_ad_ms"))
     salt = F.pmod(F.xxhash64("url"), F.lit(params.num_salts)).cast("int")
-    fb = fb.withColumn("salt", salt)
+    fb = (fb.withColumn("budget",
+                        F.floor(F.lit(params.round_seconds)
+                                / F.col("_gd")).cast("int"))
+          .withColumn("salt", salt))
     w_salt = Window.partitionBy(key, "salt").orderBy(*order_cols(pri_col))
     pruned = (fb.withColumn("_srn", F.row_number().over(w_salt))
               .filter(F.col("_srn") <= F.col("budget"))
@@ -218,41 +216,16 @@ def schedule_frontier(frontier: DataFrame, robots: DataFrame,
     w_host = Window.partitionBy(key).orderBy(*order_cols(pri_col))
     sched = (pruned.withColumn("_rn", F.row_number().over(w_host))
              .filter(F.col("_rn") <= F.col("budget"))
-             .drop("_rn", "budget")
-             .drop("_gk"))
+             .withColumn("fetch_offset_ms",
+                         ((F.col("_rn") - 1) * F.col("_gd") * 1000)
+                         .cast("long"))
+             .drop("_rn", "budget", "_gd", "_gk"))
     if params.max_scheduled_per_round is not None:
         # U9 backpressure: global top-K in total order. TakeOrderedAndProject
         # keeps this a per-partition top-K + single merge, not a full sort.
+        # Offsets are stamped before the cut and stay exact: the unit
+        # window sorts by the same total order, so each unit's kept rows
+        # are a prefix of its window and keep their ranks.
         sched = (sched.orderBy(*order_cols(pri_col))
                  .limit(params.max_scheduled_per_round))
     return sched
-
-
-def with_fetch_offsets(sched: DataFrame, robots: DataFrame,
-                       params: CrawlParams,
-                       host_delays: DataFrame | None = None,
-                       ip_delays: DataFrame | None = None,
-                       pri_col: str = "priority") -> DataFrame:
-    """Assign each scheduled URL its in-round fetch start offset:
-    rank-within-unit × effective delay(unit) — the explicit, per-host
-    (or per-address-group) form of the reference's inter-fetch interval
-    stamping (ProcessingService.java:235-240 lastDownLoadCall).
-    Deterministic: rank follows the frontier total order; the delay is
-    the same effective value the budget used — for IP grouping that is
-    the FRONTIER-derived group max, passed in, not recomputed over the
-    scheduled subset (the slowest member may not have been scheduled)."""
-    if ip_delays is not None:
-        w = Window.partitionBy("_gk").orderBy(*order_cols(pri_col))
-        return (sched.withColumn("_gk", politeness_group_col(params))
-                .join(ip_delays, "_gk")
-                .withColumn("fetch_offset_ms",
-                            ((F.row_number().over(w) - 1)
-                             * F.col("_gd") * 1000).cast("long"))
-                .drop("_gk", "_gd"))
-    delay = _effective_delay(params, host_delays)
-    w = Window.partitionBy("host_key").orderBy(*order_cols(pri_col))
-    return (_join_delays(sched, robots, host_delays)
-            .withColumn("fetch_offset_ms",
-                        ((F.row_number().over(w) - 1) * delay * 1000)
-                        .cast("long"))
-            .drop("_delay", "_ad_ms"))

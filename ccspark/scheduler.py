@@ -27,8 +27,7 @@ from .extract import extract_links
 from .fetchsim import discovered_docs, with_fetch_sim
 from .params import CrawlParams
 from .politeness import (order_cols, robots_admission_filter,
-                         group_delays, schedule_frontier,
-                         with_fetch_offsets)
+                         group_delays, schedule_frontier)
 from .seen import SeenSet, with_bucket
 from .tables import SnapshotStore
 from .udfs import CANON_FIELDS, canon_batches, dual_big_udf
@@ -82,20 +81,24 @@ def _observed_count(obs: Observation, fallback: DataFrame) -> int:
         return fallback.count()
 
 
+_CANDIDATE_DEFAULTS = {T.StringType(): "", T.IntegerType(): 0}  # else null
+
+
+def candidate_rows(df: DataFrame, hop=None, **cols) -> DataFrame:
+    """Project ``df`` onto CANDIDATE_SCHEMA: each field is the Column
+    passed under its name, else its default ('' for strings, 0 for ints,
+    null event_ms). ``hop`` (max-hops lineage) is appended when given."""
+    return df.select(
+        *[cols.get(f.name, F.lit(_CANDIDATE_DEFAULTS.get(f.dataType))
+                   .cast(f.dataType)).alias(f.name)
+          for f in CANDIDATE_SCHEMA],
+        *([hop.alias("hop")] if hop is not None else []))
+
+
 def seeds_to_candidates(seeds: DataFrame) -> DataFrame:
     """Seed list → round-0 candidates (S4; MultithreadedAnalyzer.java:185-202)."""
-    return seeds.select(
-        F.col("url").alias("url_raw"),
-        F.lit("").alias("page_url"),
-        F.lit("seed").alias("kind"),
-        F.lit("").alias("alt"),
-        F.lit("").alias("parent_txt"),
-        F.lit(0).alias("dom_depth"),
-        F.lit(0).alias("dom_sib"),
-        F.lit("seed").alias("src_doc_id"),
-        F.lit(0).alias("offset"),
-        F.lit(None).cast("long").alias("event_ms"),
-    )
+    return candidate_rows(seeds, url_raw=F.col("url"), kind=F.lit("seed"),
+                          src_doc_id=F.lit("seed"))
 
 
 def canonicalize(candidates: DataFrame, round_no: int) -> DataFrame:
@@ -252,6 +255,36 @@ class CrawlEngine:
 
     # -- one round -----------------------------------------------------------
 
+    def _readmit(self, r: int, k: int | None, status_pred, metric: str,
+                 m: dict, candidates: DataFrame, **lineage):
+        """Re-admission (recrawl / revisit): rows fetched k rounds ago
+        whose status matches `status_pred` are DELETED from the seen set
+        (tombstone delta; cuckoo slot clear) and re-injected ahead of
+        `candidates`, so they re-enter the normal canonicalize → robots →
+        dedup → seen → schedule pipeline with zero special-casing
+        downstream. Priority inputs and max-hops lineage are carried
+        verbatim (a re-fetch is the same URL at the same link distance);
+        `lineage` sets src_doc_id/offset. Returns (the cached rows, for
+        the caller to unpersist, or None when the policy is off or not
+        yet due; the candidates). Oracle mirror in ccspark.oracle."""
+        if k is None or r < k or not self.scheduled_tbl.exists():
+            return None, candidates
+        obs = Observation()
+        rows = (self.scheduled_tbl.read_chain()
+                .filter((F.col("fetch_round") == r - k) & status_pred)
+                .observe(obs, F.count(F.lit(1)).alias("n"))
+                .cache())
+        self.seen.remove(rows.select("url"), r)
+        m[metric] = _observed_count(obs, rows)
+        readmitted = candidate_rows(
+            rows, url_raw=F.col("url"),
+            **{c: F.col(c) for c in ("kind", "alt", "parent_txt",
+                                     "dom_depth", "dom_sib")},
+            **lineage,
+            hop=F.col("hop") if self.params.max_hops is not None else None)
+        return rows, readmitted.unionByName(
+            candidates.select(*readmitted.columns))
+
     def run_round(self, r: int, candidates: DataFrame,
                   batch_id: int | None = None) -> DataFrame:
         import time as _time
@@ -259,69 +292,23 @@ class CrawlEngine:
         p = self.params
         m: dict = {"round": r}
 
-        # recrawl policy: re-admit failed fetches from k rounds ago by
-        # DELETING them from the seen set (tombstone delta; cuckoo slot
-        # clear) and re-injecting them as candidates — they re-enter the
-        # normal canonicalize → robots → dedup → seen → schedule pipeline
-        # with zero special-casing downstream. Oracle mirror in
-        # ccspark.oracle (exact per-round parity tested).
-        stale = None
-        if (p.recrawl_after_rounds is not None
-                and r >= p.recrawl_after_rounds
-                and self.scheduled_tbl.exists()):
-            obs_rc = Observation()
-            stale = (self.scheduled_tbl.read_chain()
-                     # 304 Not Modified is a SUCCESS (revisit policy) —
-                     # never failure-recrawled
-                     .filter((F.col("fetch_round")
-                              == r - p.recrawl_after_rounds)
-                             & ~F.col("status").isin(200, 304))
-                     .observe(obs_rc, F.count(F.lit(1)).alias("n"))
-                     .cache())
-            self.seen.remove(stale.select("url"), r)
-            m["recrawled"] = _observed_count(obs_rc, stale)
-            stale_cand = stale.select(
-                F.col("url").alias("url_raw"), F.lit("").alias("page_url"),
-                "kind", "alt", "parent_txt", "dom_depth", "dom_sib",
-                "src_doc_id", "offset",
-                F.lit(None).cast("long").alias("event_ms"),
-                # max-hops lineage carried verbatim: a re-fetch is the
-                # same URL at the same link distance
-                *(["hop"] if p.max_hops is not None else []))
-            candidates = stale_cand.unionByName(
-                candidates.select(*stale_cand.columns))
+        # recrawl policy: re-admit failed fetches from k rounds ago.
+        # 304 Not Modified is a SUCCESS (revisit policy) — never
+        # failure-recrawled.
+        stale, candidates = self._readmit(
+            r, p.recrawl_after_rounds, ~F.col("status").isin(200, 304),
+            "recrawled", m, candidates,
+            src_doc_id=F.col("src_doc_id"), offset=F.col("offset"))
 
         # revisit policy (freshness maintenance): successful fetches from
-        # k rounds ago leave the seen set and re-enter as candidates
-        # marked src_doc_id='revisit' — fetchsim answers 200 (changed,
-        # re-extract) or 304 Not Modified (skip extraction) on the second
-        # md5 band. Same tombstone-delta + normal-pipeline shape as
-        # recrawl; oracle mirror in ccspark.oracle (exact parity tested).
-        fresh = None
-        if (p.revisit_after_rounds is not None
-                and r >= p.revisit_after_rounds
-                and self.scheduled_tbl.exists()):
-            obs_rv = Observation()
-            fresh = (self.scheduled_tbl.read_chain()
-                     .filter((F.col("fetch_round")
-                              == r - p.revisit_after_rounds)
-                             & F.col("status").isin(200, 304))
-                     .observe(obs_rv, F.count(F.lit(1)).alias("n"))
-                     .cache())
-            self.seen.remove(fresh.select("url"), r)
-            m["revisited"] = _observed_count(obs_rv, fresh)
-            fresh_cand = fresh.select(
-                F.col("url").alias("url_raw"), F.lit("").alias("page_url"),
-                "kind", "alt", "parent_txt", "dom_depth", "dom_sib",
-                # priority inputs carried verbatim (ordering stays
-                # lineage-stable); src_doc_id is ONLY the batch-dedup
-                # tie-break and the fetchsim revisit marker
-                F.lit("revisit").alias("src_doc_id"),
-                F.lit(0).alias("offset"),
-                F.lit(None).cast("long").alias("event_ms"),
-                *(["hop"] if p.max_hops is not None else []))
-            candidates = fresh_cand.unionByName(
-                candidates.select(*fresh_cand.columns))
+        # k rounds ago re-enter marked src_doc_id='revisit' — fetchsim
+        # answers 200 (changed, re-extract) or 304 Not Modified (skip
+        # extraction) on the second md5 band. src_doc_id is ONLY the
+        # batch-dedup tie-break and the fetchsim revisit marker.
+        fresh, candidates = self._readmit(
+            r, p.revisit_after_rounds, F.col("status").isin(200, 304),
+            "revisited", m, candidates,
+            src_doc_id=F.lit("revisit"), offset=F.lit(0))
 
         # max-hops frontier control (Heritrix max-hops): default missing
         # hop lineage to 0 (seed round, external candidate files), then
@@ -536,16 +523,15 @@ class CrawlEngine:
 
         # adaptive politeness: previous round's per-host integer mean
         # latency → delay floor (hosts-sized aggregate, joined into the
-        # budget exactly like the robots cache; observed on the same
-        # scheduling job — no standalone metric job). Oracle mirror in
-        # ccspark.oracle (exact budgets/offsets/ordering parity tested).
+        # budget exactly like the robots cache; its row count is observed
+        # on the scheduled commit — no standalone metric job). Oracle
+        # mirror in ccspark.oracle (exact budgets/offsets/ordering parity
+        # tested).
         host_delays = None
+        obs_ad = None
         if (p.adaptive_delay_factor_pm is not None and r >= 1
                 and self.scheduled_tbl.exists()):
-            # cached: the hosts-sized table feeds BOTH the budget join
-            # and the offsets join (an Observation would double-count
-            # across the two subtrees — cache + count instead, which
-            # also computes the aggregate once)
+            obs_ad = Observation()
             host_delays = (self.scheduled_tbl.read_chain()
                            .filter(F.col("fetch_round") == r - 1)
                            .groupBy("host_key")
@@ -553,7 +539,7 @@ class CrawlEngine:
                                f"(sum(latency_ms) div count(1))"
                                f" * {p.adaptive_delay_factor_pm} div 1000")
                                .alias("adaptive_ms"))
-                           .cache())
+                           .observe(obs_ad, F.count(F.lit(1)).alias("n")))
 
         # priority aging (starvation control): the SCHEDULING order uses
         # priority + rounds-waited × boost; the persisted priority column
@@ -584,25 +570,23 @@ class CrawlEngine:
 
         # grouped politeness (per-IP address group or per-registered-
         # domain site): the group delay table (groups-sized max
-        # aggregate over the frontier, cached — it feeds BOTH the budget
-        # join and the offsets join, and its count is the group-count
-        # metric). Oracle mirror in ccspark.oracle.
+        # aggregate over the frontier; its row count — the group-count
+        # metric — is observed on the scheduled commit). Oracle mirror
+        # in ccspark.oracle.
         ip_delays = None
+        obs_gd = None
         if p.politeness_ip_groups is not None or p.politeness_by_domain:
-            ip_delays = group_delays(frontier, self.robots, p,
-                                     host_delays).cache()
-            m["ip_groups" if p.politeness_ip_groups is not None
-              else "domain_groups"] = ip_delays.count()
+            obs_gd = Observation()
+            ip_delays = (group_delays(frontier, self.robots, p, host_delays)
+                         .observe(obs_gd, F.count(F.lit(1)).alias("n")))
 
-        # scheduled count observed on the fetched-table commit
+        # scheduled count observed on the fetched-table commit; the
+        # scheduled rows carry their fetch offsets already
         obs_sched = Observation()
         sched = (schedule_frontier(sched_in, self.robots, p, host_delays,
                                    ip_delays, pri_col)
-                 .observe(obs_sched, F.count(F.lit(1)).alias("n"))
-                 .cache())
-        fetched = (with_fetch_sim(with_fetch_offsets(sched, self.robots, p,
-                                                     host_delays, ip_delays,
-                                                     pri_col).drop("_eff"),
+                 .observe(obs_sched, F.count(F.lit(1)).alias("n")))
+        fetched = (with_fetch_sim(sched.drop("_eff"),
                                   redirects=p.follow_redirects,
                                   revisit_changed_pct=(
                                       p.revisit_changed_pct
@@ -618,8 +602,11 @@ class CrawlEngine:
                     F.lit(0)).alias("n"))
         versions["scheduled"] = self.scheduled_tbl.commit(fetched, r)
         m["scheduled"] = _observed_count(obs_sched, sched)
-        if host_delays is not None:
-            m["adaptive_hosts"] = host_delays.count()
+        if obs_gd is not None:
+            m["ip_groups" if p.politeness_ip_groups is not None
+              else "domain_groups"] = _observed_count(obs_gd, ip_delays)
+        if obs_ad is not None:
+            m["adaptive_hosts"] = _observed_count(obs_ad, host_delays)
         if obs_nm is not None:
             m["not_modified"] = int(_observed_count(
                 obs_nm, self.scheduled_tbl.read(versions["scheduled"])
@@ -674,24 +661,16 @@ class CrawlEngine:
             # not a side channel, which is what keeps ordering total
             # and targets deduped at 10^10 scale
             obs_redir = Observation()
-            redir = (self.scheduled_tbl.read(versions["scheduled"])
-                     .filter(F.col("status") == 301)
-                     .select(F.col("redirect_to").alias("url_raw"),
-                             F.col("url").alias("page_url"),
-                             F.lit("redirect").alias("kind"),
-                             F.lit("").alias("alt"),
-                             F.lit("").alias("parent_txt"),
-                             F.lit(0).alias("dom_depth"),
-                             F.lit(0).alias("dom_sib"),
-                             F.lit("redirect").alias("src_doc_id"),
-                             F.lit(0).alias("offset"),
-                             F.lit(None).cast("long").alias("event_ms"),
-                             # a followed redirect is one hop (Heritrix
-                             # counts the R-hop toward max-hops)
-                             *([(F.col("hop") + F.lit(1)).cast("int")
-                                .alias("hop")]
-                               if p.max_hops is not None else []))
-                     .observe(obs_redir, F.count(F.lit(1)).alias("n")))
+            moved = (self.scheduled_tbl.read(versions["scheduled"])
+                     .filter(F.col("status") == 301))
+            redir = candidate_rows(
+                moved, url_raw=F.col("redirect_to"), page_url=F.col("url"),
+                kind=F.lit("redirect"), src_doc_id=F.lit("redirect"),
+                # a followed redirect is one hop (Heritrix counts the
+                # R-hop toward max-hops)
+                hop=((F.col("hop") + F.lit(1)).cast("int")
+                     if p.max_hops is not None else None),
+            ).observe(obs_redir, F.count(F.lit(1)).alias("n"))
             next_cand = next_cand.select(*redir.columns).unionByName(redir)
         versions["candidates"] = self.candidates_tbl.commit(next_cand, r)
         m["pages_discovered"] = _observed_count(obs_hits, hits_all)
@@ -759,11 +738,9 @@ class CrawlEngine:
                 versions.update(rb)
                 m["rebucketed_to"] = newp
                 self.store.commit_round(r, versions, m, batch_id=batch_id)
-        for df in ((new, frontier, sched)
+        for df in ((new, frontier)
                    + ((stale,) if stale is not None else ())
                    + ((fresh,) if fresh is not None else ())
-                   + ((host_delays,) if host_delays is not None else ())
-                   + ((ip_delays,) if ip_delays is not None else ())
                    + ((cached_adm,) if cached_adm is not None else ())):
             df.unpersist()
         return self.candidates_tbl.read(versions["candidates"])
@@ -809,18 +786,10 @@ class CrawlEngine:
         from .sitemap import parse_sitemaps
         blobs = self.spark.read.parquet(sitemaps_path)
         sm = parse_sitemaps(blobs.select("host", "xml"), with_pos=True)
-        return sm.select(
-            F.col("loc").alias("url_raw"),
-            F.lit("").alias("page_url"),
-            F.lit("sitemap").alias("kind"),
-            F.lit("").alias("alt"),
-            F.lit("").alias("parent_txt"),
-            F.lit(0).alias("dom_depth"),
-            F.lit(0).alias("dom_sib"),
-            F.concat(F.lit("sitemap:"), F.col("host")).alias("src_doc_id"),
-            F.col("sm_pos").alias("offset"),
-            F.lit(None).cast("long").alias("event_ms"),
-        )
+        return candidate_rows(
+            sm, url_raw=F.col("loc"), kind=F.lit("sitemap"),
+            src_doc_id=F.concat(F.lit("sitemap:"), F.col("host")),
+            offset=F.col("sm_pos"))
 
     # -- inspection -------------------------------------------------------------
 

@@ -94,6 +94,24 @@ class TestWindowOptimizations:
                    if "Exchange hashpartitioning" in ln or "Exchange rangepartitioning" in ln)
         assert n_ex <= 4, f"{n_ex} exchanges:\n{p}"
 
+    def test_schedule_frontier_ranks_once(self, spark):
+        """Budget and fetch offset come from one rank: the scheduled rows
+        carry fetch_offset_ms, and the plan holds exactly two windows
+        (salt pre-prune + unit), not a second window for the offsets."""
+        from ccspark.benchflow import synthetic_candidates
+        from ccspark.scheduler import canonicalize
+        from ccspark.politeness import schedule_frontier
+        from ccspark.params import CrawlParams
+        robots = spark.createDataFrame(
+            [], "host string, crawl_delay double, disallow array<string>")
+        sched = schedule_frontier(
+            canonicalize(synthetic_candidates(spark, 1000), 0),
+            robots, CrawlParams())
+        assert "fetch_offset_ms" in sched.columns
+        p = phys(sched)
+        n_win = len(re.findall(r"^[\s:+|-]*(?:\*\(\d+\) )?Window\b", p, re.M))
+        assert n_win == 2, p
+
     def test_canonicalize_has_no_exchange(self, spark):
         from ccspark.benchflow import synthetic_candidates
         from ccspark.scheduler import canonicalize

@@ -335,17 +335,17 @@ class TestHeavyHitters:
                  " ".join(words[j:j + 500]) for j in range(0, len(words), 500))],
             "doc_id long, text string, lang string, source string, n_chars long")
         sf = str(tmp_path / "hh")
-        docs.write.parquet(sf + "/documents.parquet")
 
         counts = collections.Counter(words)
         n = len(words)
         want = sorted((w, c) for w, c in counts.items() if c * HH_M > n)
         assert want, "fixture must contain true heavy hitters"
         for parts in (1, 3, 16):
+            # write with a different physical partitioning each time,
+            # then query that layout
+            (docs.repartition(parts, F.col("doc_id"))
+             .write.mode("overwrite").parquet(sf + "/documents.parquet"))
             got = sorted(
                 (r.word, r.cnt)
                 for r in q_heavy_hitters(spark, sf).collect())
             assert got == want, parts
-            # re-write with a different physical partitioning each time
-            docs = docs.repartition(parts, F.col("doc_id"))
-            docs.write.mode("overwrite").parquet(sf + "/documents.parquet")
