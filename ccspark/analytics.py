@@ -678,15 +678,17 @@ def _mg_partition(batches):
 
 def q_heavy_hitters(spark, sf_dir):
     words = words_df(spark, sf_dir).select("word")
+    # the summary is at most HH_M + 1 rows per partition: collecting it
+    # once gives both consumers (candidates, n) the same sketch
     summary = words.mapInPandas(
-        _mg_partition, schema="word string, n_p long").cache()
-    n_total = (summary.filter(F.col("word") == "")
-               .agg(F.coalesce(F.sum("n_p"), F.lit(0)).alias("n")))
-    cands = summary.filter(F.col("word") != "").select("word").distinct()
+        _mg_partition, schema="word string, n_p long").collect()
+    n_total = sum(r.n_p for r in summary if r.word == "")
+    cands = spark.createDataFrame(
+        [(w,) for w in sorted({r.word for r in summary if r.word != ""})],
+        "word string")
     exact = (words.join(F.broadcast(cands), "word", "left_semi")
              .groupBy("word").agg(F.count(F.lit(1)).alias("cnt")))
-    return (exact.crossJoin(F.broadcast(n_total))
-            .filter(F.col("cnt") * HH_M > F.col("n"))
+    return (exact.filter(F.col("cnt") * HH_M > F.lit(n_total))
             .select("word", "cnt"))
 
 

@@ -32,8 +32,9 @@ def synthetic_candidates(spark: SparkSession, n: int, n_hosts: int = 10_000,
     (rank 0 gets ~ln(n_hosts)/n_hosts of all rows — a hot head), and
     ~8% of rows are relative URLs so the normalize kernel's
     reconstruction branch is exercised, not just the absolute fast path.
-    `start` offsets the id range so two workers can take DISJOINT halves
-    of one workload (the multi-JVM scale-out control in bench.py).
+    `start` offsets the id range: perfbench gives each seed its own
+    range and each round a half-overlapping window of it
+    (`perfbench/inputs.py`).
     """
     h1 = F.xxhash64(F.col("id"))
     h2 = F.xxhash64(F.col("id"), F.lit(1))

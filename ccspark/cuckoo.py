@@ -60,9 +60,12 @@ def to_bytes(table: np.ndarray) -> bytes:
 
 def key_parts(urls: pd.Series, nbuck: int) -> tuple[np.ndarray, np.ndarray]:
     """(fingerprints 1..65535, primary bucket) — vectorized, two
-    independent pandas 64-bit hashes per key."""
-    hf = pd.util.hash_pandas_object(urls, index=False, hash_key=_FP_KEY).to_numpy()
-    hi = pd.util.hash_pandas_object(urls, index=False, hash_key=_IX_KEY).to_numpy()
+    independent pandas 64-bit hashes per key (categorize=False, as in
+    seen._bit_positions, so a key's hash never depends on its batch)."""
+    hf = pd.util.hash_pandas_object(urls, index=False, hash_key=_FP_KEY,
+                                    categorize=False).to_numpy()
+    hi = pd.util.hash_pandas_object(urls, index=False, hash_key=_IX_KEY,
+                                    categorize=False).to_numpy()
     fp = (hf % np.uint64(65535)).astype(np.uint16) + np.uint16(1)
     i1 = (hi & np.uint64(nbuck - 1)).astype(np.int64)
     return fp, i1

@@ -179,9 +179,9 @@ def png_decode(data: bytes) -> np.ndarray:
     verification, zlib inflate of the concatenated IDAT stream, and
     per-scanline filter reconstruction (all five filter types).
     Supports the profile the pipeline synthesizes — 8-bit RGB (color
-    type 2), non-interlaced; anything else (palette, alpha, 16-bit,
-    Adam7) raises NotImplementedError, the honest gate where a native
-    decoder takes over in production.
+    type 2), non-interlaced or Adam7-interlaced; anything else
+    (palette, alpha, 16-bit) raises NotImplementedError, the honest
+    gate where a native decoder takes over in production.
     """
     if data[:8] != PNG_SIG:
         raise NotImplementedError("not a PNG payload")

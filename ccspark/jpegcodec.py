@@ -161,8 +161,12 @@ class _BitReader:
         self.n = 0
 
     def _fill(self):
+        if self.pos >= len(self.data):
+            raise ValueError("corrupt JPEG: truncated entropy data")
         b = self.data[self.pos]
         if b == 0xFF:
+            if self.pos + 1 >= len(self.data):
+                raise ValueError("corrupt JPEG: truncated entropy data")
             nxt = self.data[self.pos + 1]
             if nxt == 0x00:
                 self.pos += 2            # stuffed 0xFF data byte
@@ -228,8 +232,7 @@ def jpeg_encode(img: np.ndarray) -> bytes:
 
     out = bytearray(b"\xff\xd8")              # SOI
     out += _seg(0xE0, b"JFIF\x00\x01\x01\x00\x00\x01\x00\x01\x00\x00")
-    qt = _QTAB[np.argsort(ZIGZAG)]            # natural → zigzag order
-    zz = bytes(int(qt[i]) for i in range(64))
+    zz = bytes(int(v) for v in _QTAB)         # _QTAB is in zigzag order
     out += _seg(0xDB, b"\x00" + zz)           # DQT id 0
     out += _seg(0xDB, b"\x01" + zz)           # DQT id 1 (same values)
     sof = struct.pack(">BHHB", 8, h, w, ncomp)  # true dims; decoder crops
@@ -308,13 +311,17 @@ def jpeg_decode(data: bytes) -> np.ndarray:
     comps = []
     scan = None
     while pos < len(data):
-        if data[pos] != 0xFF:
+        if data[pos] != 0xFF or pos + 1 >= len(data):
             raise ValueError("corrupt JPEG: expected marker")
         marker = data[pos + 1]
         if marker == 0xD9:                    # EOI
             break
+        if pos + 4 > len(data):
+            raise ValueError("corrupt JPEG: truncated segment header")
         (length,) = struct.unpack(">H", data[pos + 2:pos + 4])
         body = data[pos + 4:pos + 2 + length]
+        if length < 2 or len(body) != length - 2:
+            raise ValueError("corrupt JPEG: truncated segment")
         pos += 2 + length
         if marker == 0xDB:
             p = 0
@@ -322,10 +329,10 @@ def jpeg_decode(data: bytes) -> np.ndarray:
                 pq, tq = body[p] >> 4, body[p] & 0x0F
                 if pq != 0:
                     raise NotImplementedError("16-bit quant tables")
-                tab = np.zeros(64, dtype=np.int64)
-                tab[ZIGZAG[np.arange(64)] * 0 + np.arange(64)] = \
-                    np.frombuffer(body[p + 1:p + 65], dtype=np.uint8)
-                qtabs[tq] = tab               # kept in zigzag order
+                if p + 65 > len(body):
+                    raise ValueError("corrupt JPEG: truncated DQT")
+                qtabs[tq] = np.frombuffer(       # kept in zigzag order
+                    body[p + 1:p + 65], dtype=np.uint8).astype(np.int64)
                 p += 65
         elif marker == 0xC4:
             p = 0
@@ -333,6 +340,8 @@ def jpeg_decode(data: bytes) -> np.ndarray:
                 tc, th = body[p] >> 4, body[p] & 0x0F
                 bits = list(body[p + 1:p + 17])
                 n = sum(bits)
+                if p + 17 + n > len(body):
+                    raise ValueError("corrupt JPEG: truncated DHT")
                 vals = list(body[p + 17:p + 17 + n])
                 huff[(tc, th)] = _huff_decode_map(bits, vals)
                 p += 17 + n
@@ -349,6 +358,8 @@ def jpeg_decode(data: bytes) -> np.ndarray:
         # APPn/COM/DRI skipped (DRI without RSTn in data is harmless)
     if sof is None or scan is None:
         raise ValueError("corrupt JPEG: missing SOF0/SOS")
+    if len(sof) < 6 or len(sof) < 6 + 3 * sof[5]:
+        raise ValueError("corrupt JPEG: truncated SOF0")
     precision, ph, pw, ncomp = struct.unpack(">BHHB", sof[:6])
     if precision != 8:
         raise NotImplementedError("only 8-bit precision is supported")
@@ -358,13 +369,22 @@ def jpeg_decode(data: bytes) -> np.ndarray:
             raise NotImplementedError(
                 "chroma subsampling requires a native decoder")
         comps.append((cid, tq))
+    if not scan or len(scan) < 1 + 2 * scan[0]:
+        raise ValueError("corrupt JPEG: truncated SOS")
     ns = scan[0]
     if ns != ncomp:
         raise NotImplementedError("multi-scan JPEG is not supported")
     tables = []
     for c in range(ns):
         cid, tsel = scan[1 + 2 * c:3 + 2 * c]
-        tables.append((tsel >> 4, tsel & 0x0F))
+        dc_ac = huff.get((0, tsel >> 4)), huff.get((1, tsel & 0x0F))
+        if None in dc_ac:
+            raise ValueError("corrupt JPEG: scan selects an undefined "
+                             "Huffman table")
+        if comps[c][1] not in qtabs:
+            raise ValueError("corrupt JPEG: component selects an "
+                             "undefined quantization table")
+        tables.append(dc_ac)
 
     br = _BitReader(data, pos)
     out = np.zeros((-(-ph // 8) * 8, -(-pw // 8) * 8, ncomp), dtype=np.uint8)
@@ -383,10 +403,11 @@ def jpeg_decode(data: bytes) -> np.ndarray:
     for by in range(out.shape[0] // 8):
         for bx in range(out.shape[1] // 8):
             for c in range(ncomp):
-                dc_tab = huff[(0, tables[c][0])]
-                ac_tab = huff[(1, tables[c][1])]
+                dc_tab, ac_tab = tables[c]
                 q = np.zeros(64, dtype=np.int64)
                 size = huff_sym(dc_tab)
+                if size > 11:                 # 8-bit DC categories: 0..11
+                    raise ValueError("corrupt JPEG: DC category > 11")
                 pred[c] += _extend(br.bits(size), size)
                 q[0] = pred[c]
                 k = 1
@@ -409,5 +430,7 @@ def jpeg_decode(data: bytes) -> np.ndarray:
                 block = _T.T @ coefs.reshape(8, 8) @ _T
                 out[by * 8:by * 8 + 8, bx * 8:bx * 8 + 8, c] = np.clip(
                     np.round(block) + 128, 0, 255).astype(np.uint8)
+    if data[br.pos:br.pos + 2] != b"\xff\xd9":
+        raise ValueError("corrupt JPEG: missing EOI after the scan")
     out = out[:ph, :pw]
     return out[:, :, 0] if ncomp == 1 else out

@@ -69,9 +69,13 @@ FILTER_ROW_SCHEMA = T.StructType(
 
 def _bit_positions(urls: pd.Series, m_bits: int, k: int) -> np.ndarray:
     """(len(urls), k) bloom bit indices — fully vectorized (pandas'
-    C-implemented 64-bit hashing, two independent keys, double hashing)."""
-    h1 = pd.util.hash_pandas_object(urls, index=False, hash_key=_HASH_KEY_1).to_numpy()
-    h2 = pd.util.hash_pandas_object(urls, index=False, hash_key=_HASH_KEY_2).to_numpy()
+    C-implemented 64-bit hashing, two independent keys, double hashing).
+    categorize=False: pandas' factorize pre-pass compares strings up to
+    the first NUL, so "a" and "a\\x00" in one batch would share a hash."""
+    h1 = pd.util.hash_pandas_object(urls, index=False, hash_key=_HASH_KEY_1,
+                                    categorize=False).to_numpy()
+    h2 = pd.util.hash_pandas_object(urls, index=False, hash_key=_HASH_KEY_2,
+                                    categorize=False).to_numpy()
     j = np.arange(k, dtype=np.uint64)
     return ((h1[:, None] + j[None, :] * h2[:, None]) % np.uint64(m_bits)).astype(np.int64)
 

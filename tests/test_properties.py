@@ -86,6 +86,21 @@ class TestBloomProperties:
             idx = _bit_positions(pd.Series(probe), m, k)
             assert bits[idx].all(axis=1).all()
 
+    def test_key_hash_independent_of_batch(self):
+        """A key hashes the same alone as beside a key that differs from
+        it only by a trailing NUL (the falsifying example hypothesis
+        found for test_no_false_negatives)."""
+        from ccspark.cuckoo import key_parts
+
+        batch = pd.Series(["0", "1", "0\x00"])
+        together = _bit_positions(batch, 1 << 12, 7)
+        fp, i1 = key_parts(batch, 1 << 10)
+        for i, key in enumerate(batch):
+            alone = pd.Series([key])
+            assert (_bit_positions(alone, 1 << 12, 7)[0] == together[i]).all()
+            afp, ai1 = key_parts(alone, 1 << 10)
+            assert (afp[0], ai1[0]) == (fp[i], i1[i])
+
 
 class TestSchedulerInvariants:
     def test_budget_never_exceeded(self, spark):
@@ -349,3 +364,13 @@ class TestHeavyHitters:
                 (r.word, r.cnt)
                 for r in q_heavy_hitters(spark, sf).collect())
             assert got == want, parts
+
+    def test_leaves_no_cached_sketch(self, spark, sf_dir):
+        from ccspark.analytics import q_heavy_hitters
+
+        def persisted():
+            return spark.sparkContext._jsc.getPersistentRDDs().size()
+
+        before = persisted()
+        q_heavy_hitters(spark, sf_dir).collect()
+        assert persisted() == before
