@@ -191,10 +191,14 @@ class CrawlEngine:
         if "allow" in robots.columns:
             pick_fields.append(F.col("allow"))
         pick = F.struct(*pick_fields)
-        robots = (robots.groupBy("host")
-                  .agg(F.max_by(F.struct(*payload), pick).alias("_r"))
-                  .select("host", "_r.*"))
-        self.robots = robots
+        # Resolved once per engine: every round's robots join and
+        # schedule broadcast reads the cached rows instead of re-running
+        # the aggregate (engines over the same robots file share the
+        # entry — Spark's cache manager matches equal plans).
+        self.robots = (robots.groupBy("host")
+                       .agg(F.max_by(F.struct(*payload), pick).alias("_r"))
+                       .select("host", "_r.*")
+                       .cache())
         self.docs = spark.read.parquet(documents_path)
         self._prev_depth = 0  # frontier depth after the last completed round
         # running seen-set cardinality (driver scalar, rides each

@@ -28,11 +28,13 @@ are bookkept separately):
    (bucket, blob, n, v) snapshot table committed as PER-BUCKET DELTAS: a
    round writes only the buckets that received new URLs, reads resolve
    latest-bucket-wins (max_by v), and compaction periodically
-   materializes the resolved state. Probing splits candidates into
-   definitely-new (bypass the exact join entirely — the common case on a
-   growing crawl) and maybe-seen (the only rows that pay the exact
-   anti-join shuffle). False positives cost a redundant join probe;
-   false negatives are impossible (property tests for both kinds).
+   materializes the resolved state. The probe flags each candidate
+   maybe_seen, and ONE left-anti join keyed on (url, maybe_seen) against
+   the exact set (url, true) removes the seen rows: a definitely-new row
+   (maybe_seen=false) can never match, so only maybe-seen rows can be
+   dropped, and the probe kernel runs once per round. False positives
+   cost a redundant join match; false negatives are impossible
+   (property tests for both kinds).
 
 Scale arithmetic (BASELINE.md): P=256 buckets. At bench (1e6 URLs) each
 bloom bitmap is 2^20 bits = 128 KiB → 32 MiB total. At 1e10 URLs: 39e6
@@ -285,8 +287,10 @@ class SeenSet:
 
     def filter_new(self, candidates: DataFrame) -> DataFrame:
         """Candidates (must carry url/url_hash/bucket) → rows whose url has
-        never been seen. Approximate-filter pre-filter when enabled; exact
-        anti-join backstop always."""
+        never been seen. With a filter, the probe flags maybe_seen and
+        one anti-join keyed on (url, maybe_seen) against the exact set
+        (url, true) drops the seen rows: definitely-new rows can never
+        match. Without one, a plain exact anti-join on url."""
         seen = self.seen_df()
         if seen is None:
             return candidates
@@ -310,10 +314,10 @@ class SeenSet:
         flagged = (candidates.groupBy("bucket")
                    .cogroup(filt.groupBy("bucket"))
                    .applyInPandas(probe, schema=out_schema))
-        definite_new = flagged.filter(~F.col("maybe_seen")).drop("maybe_seen")
-        maybe = (flagged.filter(F.col("maybe_seen")).drop("maybe_seen")
-                 .join(seen.select("url"), "url", "left_anti"))
-        return definite_new.unionByName(maybe)
+        return (flagged
+                .join(seen.select("url", F.lit(True).alias("maybe_seen")),
+                      ["url", "maybe_seen"], "left_anti")
+                .select(*candidates.columns))
 
     # -- commit new URLs -----------------------------------------------------
 

@@ -3,8 +3,11 @@
 No Iceberg runtime jar is available in-sandbox (SURVEY.md §7.0), so this
 module provides the three Iceberg properties the north_rule exercises —
 snapshot isolation, time-travel to round k, and resumability — as
-partitioned parquet plus an explicit `_snapshots/v{N}.json` log carrying
-per-partition lineage (files), row counts, parent version, and metrics.
+parquet plus an explicit `_snapshots/v{N}.json` log carrying lineage
+(files), parent version, metrics and the snapshot's schema of record.
+Reads hand that schema to the parquet reader, so a read runs no Spark
+job (no footer inference) and an added column reads as NULL in older
+snapshots (Iceberg add-column semantics) without parquet schema merging.
 The interface is deliberately narrow so a real Iceberg catalog can be
 dropped in behind it later.
 
@@ -20,7 +23,7 @@ import os
 import shutil
 import time
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, types as T
 
 
 class SnapshotTable:
@@ -30,6 +33,10 @@ class SnapshotTable:
         self.dir = os.path.join(root, name)
         self.snap_dir = os.path.join(self.dir, "_snapshots")
         os.makedirs(self.snap_dir, exist_ok=True)
+        # schemas inferred for manifests that predate recorded schemas,
+        # keyed by (version, committed_at): a version number reused after
+        # a rollback is a different snapshot
+        self._inferred: dict[tuple, T.StructType] = {}
 
     # -- snapshot log ------------------------------------------------------
 
@@ -50,13 +57,27 @@ class SnapshotTable:
 
     # -- commit / read -----------------------------------------------------
 
+    def schema(self, version: int) -> T.StructType:
+        """The version's schema of record, from its manifest. A manifest
+        written before schemas were recorded has none; that version's
+        schema is inferred from its parquet footers once (one Spark job)
+        and remembered."""
+        meta = self.meta(version)
+        if "schema" in meta:
+            return T.StructType.fromJson(json.loads(meta["schema"]))
+        key = (version, meta.get("committed_at"))
+        if key not in self._inferred:
+            self._inferred[key] = self.spark.read.parquet(
+                os.path.join(self.dir, f"v{version}")).schema
+        return self._inferred[key]
+
     def commit(self, df: DataFrame, round_no: int, metrics: dict | None = None,
-               partition_by: list[str] | None = None,
                repartition: tuple | None = None, kind: str = "delta") -> int:
         """Write df as the next snapshot version. The JSON manifest is
         written only after the parquet write fully succeeds, so a crash
         mid-write leaves the previous snapshot authoritative (the
-        resumability contract). kind='full' marks a snapshot that
+        resumability contract). The manifest records df's schema as the
+        snapshot's schema of record. kind='full' marks a snapshot that
         replaces the whole chain before it (compaction)."""
         # optimistic concurrency (Iceberg's atomic metadata-pointer swap,
         # filesystem edition): CLAIM the version number via O_EXCL file
@@ -79,10 +100,7 @@ class SnapshotTable:
         w = df
         if repartition is not None:
             w = w.repartition(*repartition)
-        writer = w.write.mode("overwrite")
-        if partition_by:
-            writer = writer.partitionBy(*partition_by)
-        writer.parquet(path)
+        w.write.mode("overwrite").parquet(path)
         files = []
         for base, _, names in os.walk(path):
             for n in names:
@@ -97,12 +115,10 @@ class SnapshotTable:
             "path": path,
             "files": sorted(files),
             "num_files": len(files),
-            # column set of record (Iceberg schema-tracking analog):
-            # read_chain compares these across the chain and turns on
-            # parquet schema merging ONLY when versions disagree —
-            # schema evolution without taxing the common fixed-schema
-            # read with per-file footer merges
+            # schema of record (Iceberg schema tracking): reads pass it
+            # to the parquet reader instead of inferring it from footers
             "columns": list(df.columns),
+            "schema": df.schema.json(),
             "metrics": metrics or {},
             "committed_at": time.time(),
         }
@@ -117,19 +133,22 @@ class SnapshotTable:
         return version
 
     def read(self, version: int | None = None) -> DataFrame:
-        """Read a snapshot (latest by default) — time travel via version."""
+        """Read a snapshot (latest by default) — time travel via version.
+        The manifest's schema of record is the read schema."""
         if version is None:
             version = self.latest_version()
         if version is None:
             raise FileNotFoundError(f"no snapshots for table {self.name}")
-        return self.spark.read.parquet(os.path.join(self.dir, f"v{version}"))
+        return (self.spark.read.schema(self.schema(version))
+                .parquet(os.path.join(self.dir, f"v{version}")))
 
     def read_chain(self, version: int | None = None) -> DataFrame:
         """Append-mode read: the UNION of delta snapshots since (and
         including) the last 'full' snapshot ≤ version. Used for
         append-only tables (the seen set) so each round commits only its
         delta instead of rewriting history — the Iceberg append analog;
-        compaction (`compact_chain`) bounds the chain length."""
+        compaction (`compact_chain`) bounds the chain length. The read
+        schema is the union of the live versions' schemas of record."""
         if version is None:
             version = self.latest_version()
         if version is None:
@@ -141,17 +160,15 @@ class SnapshotTable:
                 base = v
         live = [v for v in vs if v >= base]
         paths = [os.path.join(self.dir, f"v{v}") for v in live]
-        # schema evolution (Iceberg add-column semantics): when the
-        # chain's recorded column sets disagree — a later delta added a
-        # column — merge parquet schemas so earlier rows surface the new
-        # column as NULL. The common fixed-schema chain skips the merge
-        # (per-file footer reads) entirely; manifests predating column
-        # tracking read as unknown and take the safe merging path.
-        colsets = [tuple(self.meta(v).get("columns") or ()) for v in live]
-        reader = self.spark.read
-        if len(set(colsets)) > 1 or () in colsets:
-            reader = reader.option("mergeSchema", "true")
-        return reader.parquet(*paths)
+        # schema evolution (Iceberg add-column semantics): the read schema
+        # is the union of the live versions' fields in first-seen order,
+        # so a column a later delta added reads as NULL in earlier rows
+        fields: dict[str, T.StructField] = {}
+        for v in live:
+            for f in self.schema(v).fields:
+                fields.setdefault(f.name, f)
+        return (self.spark.read.schema(T.StructType(list(fields.values())))
+                .parquet(*paths))
 
     def chain_base_round(self, version: int | None = None) -> int:
         """Round of the 'full' snapshot the live chain is based on

@@ -10,8 +10,10 @@ breaks a row somewhere in 5 rounds.
 """
 
 import dataclasses
+import os
 
 import pytest
+from pyspark.sql import types as T
 
 from ccspark.oracle import run_oracle
 from ccspark.params import CrawlParams
@@ -142,3 +144,34 @@ def test_rebucket_fired_and_layout_live(engine):
     assert (eng.seen.seen_df()
             .filter(F.pmod(F.col("url_hash"), F.lit(p)).cast("int")
                     != F.col("bucket")).count()) == 0
+
+
+def _nullable(schema: T.StructType) -> T.StructType:
+    """The schema with every field, element and value nullable."""
+    def walk(node):
+        if isinstance(node, dict):
+            return {k: (True if k in ("nullable", "containsNull",
+                                      "valueContainsNull") else walk(v))
+                    for k, v in node.items()}
+        if isinstance(node, list):
+            return [walk(v) for v in node]
+        return node
+    return T.StructType.fromJson(walk(schema.jsonValue()))
+
+
+def test_snapshot_schemas_of_record_match_files(engine, spark):
+    """Every snapshot the crawl committed reads back, through its
+    manifest's schema of record, with the schema its parquet files
+    carry (file reads are all-nullable, so compare as nullable)."""
+    eng, _, state = engine
+    checked = set()
+    for name in sorted(os.listdir(state)):
+        if not os.path.isdir(os.path.join(state, name, "_snapshots")):
+            continue
+        t = eng.store.table(name)
+        for v in t.versions():
+            files = spark.read.parquet(os.path.join(t.dir, f"v{v}")).schema
+            assert _nullable(t.read(v).schema) == _nullable(files), (name, v)
+            checked.add(name)
+    assert {"seen", "frontier", "scheduled", "candidates", "domains",
+            "traps", "digests"} <= checked

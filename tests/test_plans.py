@@ -130,6 +130,56 @@ class TestWindowOptimizations:
         assert len(py) == 1, f"{py}:\n{p}"
 
 
+class TestSeenRoundPlans:
+    def test_filter_new_probes_once(self, spark, tmp_path):
+        """The bloom probe is one cogroup: its flagged rows feed a single
+        anti-join keyed on (url, maybe_seen), not a union of a
+        definitely-new branch and an anti-joined maybe-seen branch (which
+        evaluated the Python probe once per branch)."""
+        from ccspark.seen import SeenSet, with_bucket
+        from ccspark.tables import SnapshotStore
+
+        seen = SeenSet(SnapshotStore(spark, str(tmp_path / "st")),
+                       partitions=4, filter_kind="bloom",
+                       bits_per_bucket=1 << 12)
+        urls = spark.createDataFrame(
+            [(f"http://h/{i}",) for i in range(40)], "url string")
+        seen.add(with_bucket(urls.filter("url < 'http://h/2'"),
+                             partitions=4), 0)
+        new = seen.filter_new(with_bucket(urls, partitions=4))
+        p = phys(new)
+        assert p.count("FlatMapCoGroupsInPandas") == 1, p
+        assert new.columns == with_bucket(urls, partitions=4).columns
+        assert ({r.url for r in new.collect()}
+                == {r.url for r in urls.filter("url >= 'http://h/2'")
+                    .collect()})
+
+    def test_round_job_budget(self, spark, fx_small, tmp_path):
+        """Round 1 of the crawl fixture runs at most 27 Spark jobs. Each
+        of three wastes adds jobs: a second bloom probe (union branches),
+        a schema-inference job per snapshot read, and the robots
+        aggregate re-run per broadcast. It also fails if the bloom commit
+        stops reusing the cached `new` (canonicalize and its broadcasts
+        would run again)."""
+        from ccspark.params import CrawlParams
+        from ccspark.scheduler import CrawlEngine, seeds_to_candidates
+
+        eng = CrawlEngine(spark, str(tmp_path / "st"), fx_small["documents"],
+                          fx_small["seeds"], fx_small["robots"],
+                          params=CrawlParams(rounds=2))
+        sc = spark.sparkContext
+        cand = eng.run_round(0, seeds_to_candidates(
+            spark.read.parquet(fx_small["seeds"])))
+        group = f"round-budget-{tmp_path.name}"
+        sc.setJobGroup(group, "round 1 job budget", False)
+        try:
+            eng.run_round(1, cand)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        jobs = sc.statusTracker().getJobIdsForGroup(group)
+        assert 0 < len(jobs) <= 27, f"{len(jobs)} jobs in round 1"
+
+
 class TestDedupPlans:
     def test_minhash_lsh_join_keys_are_band_and_hash(self, spark):
         """The LSH self-join must key on (band, minhash) — never a cross
