@@ -3,14 +3,21 @@
 Spark restatement of the reference's CommonCrawlAnalyzer pipeline
 (CommonCrawlAnalyzer.java:96-139 + ProcessingService.java:176-252) and of
 its 500-file chunked sequential-job loop (AWSMediaExtractor.java:71-84),
-with one scheduling round =
+with one scheduling round = `CrawlEngine.run_round`, the ordered phases
 
-    candidates → canonicalize (one Arrow pass) → robots admission →
-    first-wins dedup (batch window + bloom/exact seen anti-join) →
-    priority total order → per-host politeness budget (salted top-K) →
-    fetch-sim → discovery join → extract next candidates →
-    snapshot commits (seen Δ, bloom, frontier, scheduled, candidates)
-    + per-round metrics (frontier-depth, dedup-rate — north_rule)
+    admit      re-admission (recrawl, revisit), max-hops, canonicalize
+               (one Arrow pass), PageRank prior, robots, crawl traps
+    seen       first-wins batch dedup, bloom/exact seen anti-join
+               (`filter_new`), per-host quota, seen Δ + bloom commit
+    domains    first-seen hosts commit
+    schedule   frontier union, priority view (aging, dual-model),
+    + fetch    adaptive/group delays, per-host politeness budget
+               (salted top-K), fetch-sim, scheduled + frontier commits
+    discover   discovery join, content dedup, links + redirects →
+               next candidates commit
+    then the round-log commit and maintenance (compaction, expiry,
+    rebucket). Every per-round metric (frontier-depth, dedup-rate —
+    north_rule) is a count observed on a job the round already runs.
 
 Every round is resumable: the round log records the table versions a
 completed round produced; resume rolls tables back to the last complete
@@ -19,6 +26,9 @@ ccspark.oracle exactly (tested per-round, rows AND order).
 """
 
 from __future__ import annotations
+
+import time
+from functools import reduce
 
 from pyspark.sql import (DataFrame, Observation, SparkSession, Window,
                          functions as F, types as T)
@@ -29,7 +39,7 @@ from .params import CrawlParams
 from .politeness import (order_cols, robots_admission_filter,
                          group_delays, schedule_frontier)
 from .seen import SeenSet, with_bucket
-from .tables import SnapshotStore
+from .tables import SnapshotStore, SnapshotTable
 from .udfs import CANON_FIELDS, canon_batches, dual_big_udf
 
 CANDIDATE_SCHEMA = T.StructType([
@@ -70,15 +80,65 @@ def span_serial_expr():
         "\n")
 
 
-def _observed_count(obs: Observation, fallback: DataFrame) -> int:
-    """obs.get['n'] with a count() fallback: an optimizer that proves a
-    branch empty may eliminate the CollectMetrics node entirely (the AQE
-    rule is excluded in get_spark, but sessions built elsewhere — e.g.
-    the driver harness — may keep it)."""
-    try:
-        return obs.get["n"]
-    except Exception:
-        return fallback.count()
+class _Counts:
+    """Row counts observed on the jobs a round already runs, by name.
+    `tap` attaches the observation where the count is taken;
+    `counts[name]` reads it once an action has run the frame. An
+    optimizer that proves a branch empty may eliminate the
+    CollectMetrics node entirely (AQE's AQEPropagateEmptyRelation is
+    excluded in get_spark, but sessions built elsewhere — e.g. the
+    driver harness — may keep it); the read then counts the tap's
+    fallback frame instead."""
+
+    def __init__(self):
+        self._taps: dict[str, tuple[Observation, DataFrame]] = {}
+
+    def tap(self, name: str, df: DataFrame, where=None) -> DataFrame:
+        """`df` observing its row count as `name` — or, given the
+        boolean Column `where`, the number of rows where it holds. The
+        fallback is `df` (or `df.filter(where)`)."""
+        obs = Observation()
+        if where is None:
+            n, fallback = F.count(F.lit(1)), df
+        else:
+            n = F.coalesce(F.sum(where.cast("long")), F.lit(0))
+            fallback = df.filter(where)
+        self._taps[name] = (obs, fallback)
+        return df.observe(obs, n.alias("n"))
+
+    def __contains__(self, name: str) -> bool:
+        return name in self._taps
+
+    def __getitem__(self, name: str) -> int:
+        obs, fallback = self._taps[name]
+        try:
+            return int(obs.get["n"])
+        except Exception:
+            return fallback.count()
+
+
+class _Round:
+    """One round's working state, shared by its phases: the round
+    number, its metrics, the table versions it committed, its observed
+    counts, and the frames it cached (unpersisted when the round ends,
+    whether it completes or raises)."""
+
+    def __init__(self, r: int):
+        self.r = r
+        self.m: dict = {"round": r}
+        self.versions: dict[str, int] = {}
+        self.counts = _Counts()
+        self.cached: list[DataFrame] = []
+
+    def cache(self, df: DataFrame) -> DataFrame:
+        self.cached.append(df.cache())
+        return self.cached[-1]
+
+    def record(self, *names: str) -> None:
+        """Copy each tapped count among `names` into the metrics."""
+        for name in names:
+            if name in self.counts:
+                self.m[name] = self.counts[name]
 
 
 _CANDIDATE_DEFAULTS = {T.StringType(): "", T.IntegerType(): 0}  # else null
@@ -258,9 +318,33 @@ class CrawlEngine:
         return nxt, cand
 
     # -- one round -----------------------------------------------------------
+    # run_round is the ordered phase sequence admit → seen → domains →
+    # schedule+fetch → discover, then the round-log commit and
+    # maintenance. Each phase reads and writes one _Round context.
 
-    def _readmit(self, r: int, k: int | None, status_pred, metric: str,
-                 m: dict, candidates: DataFrame, **lineage):
+    def run_round(self, r: int, candidates: DataFrame,
+                  batch_id: int | None = None) -> DataFrame:
+        t0 = time.perf_counter()
+        rc = _Round(r)
+        try:
+            new = self._seen(rc, self._admit(rc, candidates))
+            self._domains(rc, new)
+            self._schedule_fetch(rc, new)
+            self._discover(rc)
+            # A13 phase-timer analog: wall time is observability only —
+            # never part of the oracle-checked metric set
+            rc.m["wall_s"] = round(time.perf_counter() - t0, 3)
+            self.store.commit_round(r, rc.versions, rc.m, batch_id=batch_id)
+            self._maintain(rc, batch_id)
+        finally:
+            # a round that raises (a streaming micro-batch redelivered to
+            # this engine) must not leave its frames cached
+            for df in rc.cached:
+                df.unpersist()
+        return self.candidates_tbl.read(rc.versions["candidates"])
+
+    def _readmit(self, rc: _Round, k: int | None, status_pred, metric: str,
+                 candidates: DataFrame, **lineage) -> DataFrame:
         """Re-admission (recrawl / revisit): rows fetched k rounds ago
         whose status matches `status_pred` are DELETED from the seen set
         (tombstone delta; cuckoo slot clear) and re-injected ahead of
@@ -268,213 +352,135 @@ class CrawlEngine:
         dedup → seen → schedule pipeline with zero special-casing
         downstream. Priority inputs and max-hops lineage are carried
         verbatim (a re-fetch is the same URL at the same link distance);
-        `lineage` sets src_doc_id/offset. Returns (the cached rows, for
-        the caller to unpersist, or None when the policy is off or not
-        yet due; the candidates). Oracle mirror in ccspark.oracle."""
-        if k is None or r < k or not self.scheduled_tbl.exists():
-            return None, candidates
-        obs = Observation()
-        rows = (self.scheduled_tbl.read_chain()
-                .filter((F.col("fetch_round") == r - k) & status_pred)
-                .observe(obs, F.count(F.lit(1)).alias("n"))
-                .cache())
-        self.seen.remove(rows.select("url"), r)
-        m[metric] = _observed_count(obs, rows)
+        `lineage` sets src_doc_id/offset. A no-op when the policy is off
+        or not yet due. Oracle mirror in ccspark.oracle."""
+        if k is None or rc.r < k or not self.scheduled_tbl.exists():
+            return candidates
+        rows = rc.cache(rc.counts.tap(
+            metric, self.scheduled_tbl.read_chain()
+            .filter((F.col("fetch_round") == rc.r - k) & status_pred)))
+        self.seen.remove(rows.select("url"), rc.r)
+        rc.record(metric)
         readmitted = candidate_rows(
             rows, url_raw=F.col("url"),
             **{c: F.col(c) for c in ("kind", "alt", "parent_txt",
                                      "dom_depth", "dom_sib")},
             **lineage,
             hop=F.col("hop") if self.params.max_hops is not None else None)
-        return rows, readmitted.unionByName(
-            candidates.select(*readmitted.columns))
+        return readmitted.unionByName(candidates.select(*readmitted.columns))
 
-    def run_round(self, r: int, candidates: DataFrame,
-                  batch_id: int | None = None) -> DataFrame:
-        import time as _time
-        t0 = _time.perf_counter()
-        p = self.params
-        m: dict = {"round": r}
-
+    def _admit(self, rc: _Round, candidates: DataFrame) -> DataFrame:
+        """Phase admit: re-admission, max-hops, canonicalize, PageRank
+        prior, robots, crawl traps. Only the re-admission removals and
+        the trap commit run here: EVERY admission count is an
+        observation that rides the seen-delta commit's job (the round
+        runs no standalone metric jobs — each job pays fixed scheduler
+        and worker overhead)."""
+        p, c = self.params, rc.counts
         # recrawl policy: re-admit failed fetches from k rounds ago.
         # 304 Not Modified is a SUCCESS (revisit policy) — never
         # failure-recrawled.
-        stale, candidates = self._readmit(
-            r, p.recrawl_after_rounds, ~F.col("status").isin(200, 304),
-            "recrawled", m, candidates,
+        candidates = self._readmit(
+            rc, p.recrawl_after_rounds, ~F.col("status").isin(200, 304),
+            "recrawled", candidates,
             src_doc_id=F.col("src_doc_id"), offset=F.col("offset"))
-
         # revisit policy (freshness maintenance): successful fetches from
         # k rounds ago re-enter marked src_doc_id='revisit' — fetchsim
         # answers 200 (changed, re-extract) or 304 Not Modified (skip
         # extraction) on the second md5 band. src_doc_id is ONLY the
         # batch-dedup tie-break and the fetchsim revisit marker.
-        fresh, candidates = self._readmit(
-            r, p.revisit_after_rounds, F.col("status").isin(200, 304),
-            "revisited", m, candidates,
+        candidates = self._readmit(
+            rc, p.revisit_after_rounds, F.col("status").isin(200, 304),
+            "revisited", candidates,
             src_doc_id=F.lit("revisit"), offset=F.lit(0))
-
         # max-hops frontier control (Heritrix max-hops): default missing
         # hop lineage to 0 (seed round, external candidate files), then
-        # drop candidates beyond the limit BEFORE admission. The dropped
-        # count rides the same job as every other admission metric.
-        obs_hx = None
-        cand_pre = None
+        # drop candidates beyond the limit BEFORE admission
         if p.max_hops is not None:
             if "hop" not in candidates.columns:
                 candidates = candidates.withColumn(
                     "hop", F.lit(0).cast("int"))
-            obs_hx = Observation()
-            cand_pre = candidates
-            candidates = (candidates
-                          .observe(obs_hx, F.coalesce(
-                              F.sum((F.col("hop") > p.max_hops)
-                                    .cast("long")), F.lit(0)).alias("n"))
+            candidates = (c.tap("hops_exceeded", candidates,
+                                F.col("hop") > p.max_hops)
                           .filter(F.col("hop") <= p.max_hops))
-
-        # EVERY admission metric rides the seen-delta commit's action as
-        # an Observation — per-round job count is the driver-side cost
-        # that dominates the loop (each job pays fixed scheduler+worker
-        # overhead), so the round runs NO standalone metric jobs at all:
-        # candidates_in / n_canon / n_admitted / new_seen all materialize
-        # during the one job that also computes the UDF canonicalization
-        # exactly once (no cache needed — nothing downstream re-reads the
-        # pre-dedup lineage).
-        obs_in = Observation()
-        obs_canon = Observation()
-        obs_adm = Observation()
-        candidates = candidates.observe(obs_in, F.count(F.lit(1)).alias("n"))
-        canon = canonicalize(candidates, r)
+        canon = canonicalize(c.tap("candidates_in", candidates), rc.r)
         if p.pagerank_prior_weight is not None:
             # OPIC-style host-centrality boost on this batch's link graph
             # (webgraph.apply_pagerank_prior; oracle mirror in
             # ccspark.oracle — exact ordering parity tested). The batch
             # feeds both the rank build and the boost join: cache once.
             from .webgraph import apply_pagerank_prior
-            canon = apply_pagerank_prior(canon.cache(),
+            canon = apply_pagerank_prior(rc.cache(canon),
                                          p.pagerank_prior_weight)
-        canon = canon.observe(obs_canon, F.count(F.lit(1)).alias("n"))
-        admitted = (robots_admission_filter(canon, self.robots)
-                    .observe(obs_adm, F.count(F.lit(1)).alias("n")))
-        pre_trap = admitted
-
-        # crawl-trap guard (optional, params.trap_ratio_pm): per-host
-        # URL-template collapse on THIS round's admitted batch — template
-        # = query stripped, digit runs → 'N'. Hosts whose distinct-URL /
+        admitted = c.tap("admitted", robots_admission_filter(
+            c.tap("canonical", canon), self.robots))
+        if p.trap_ratio_pm is None:
+            return admitted
+        # crawl-trap guard (params.trap_ratio_pm): per-host URL-template
+        # collapse on THIS round's admitted batch — template = query
+        # stripped, digit runs → 'N'. Hosts whose distinct-URL /
         # distinct-template ratio crosses the explosion threshold join a
-        # persistent trap table (delta commit, same mechanism as domains)
-        # and their candidates are dropped at admission from this round
-        # on. Detection is a hosts-sized aggregate (two count_distinct
-        # with map-side partial distinct) and the drop is a broadcast
+        # persistent trap table (first-seen delta, like domains) and
+        # their candidates are dropped at admission from this round on.
+        # Detection is a hosts-sized aggregate (two count_distinct with
+        # map-side partial distinct) and the drop is a broadcast
         # anti-join — the robots disallow-list shape. Oracle mirror in
         # ccspark.oracle (exact per-round parity tested).
-        trap_version = None
-        cached_adm = None
-        obs_kept = None
-        if p.trap_ratio_pm is not None:
-            cached_adm = admitted.cache()
-            tmpl = F.regexp_replace(
-                F.regexp_replace("url", r"\?.*$", ""), "[0-9]+", "N")
-            stats = (cached_adm.select("host_key", "url", tmpl.alias("tmpl"))
-                     .groupBy("host_key")
-                     .agg(F.countDistinct("url").alias("n_urls"),
-                          F.countDistinct("tmpl").alias("n_templates")))
-            round_traps = (stats.filter(
-                (F.col("n_urls") >= p.trap_min_urls)
-                & (F.expr("(1000 * n_urls) div n_templates")
-                   >= p.trap_ratio_pm)).select("host_key"))
-            if self.traps_tbl.exists():
-                round_traps = round_traps.join(
-                    self.traps_tbl.read_chain(), "host_key", "left_anti")
-            obs_tr = Observation()
-            new_traps = (round_traps.withColumn("first_round", F.lit(r))
-                         .observe(obs_tr, F.count(F.lit(1)).alias("n")))
-            trap_version = self.traps_tbl.commit(new_traps, r)
-            m["trap_hosts_new"] = _observed_count(obs_tr, new_traps)
-            obs_kept = Observation()
-            admitted = (cached_adm.join(
-                F.broadcast(self.traps_tbl.read_chain()
-                            .select("host_key")),
-                "host_key", "left_anti")
-                .observe(obs_kept, F.count(F.lit(1)).alias("n")))
+        admitted = rc.cache(admitted)
+        tmpl = F.regexp_replace(
+            F.regexp_replace("url", r"\?.*$", ""), "[0-9]+", "N")
+        stats = (admitted.select("host_key", "url", tmpl.alias("tmpl"))
+                 .groupBy("host_key")
+                 .agg(F.countDistinct("url").alias("n_urls"),
+                      F.countDistinct("tmpl").alias("n_templates")))
+        self._first_seen(rc, self.traps_tbl, stats.filter(
+            (F.col("n_urls") >= p.trap_min_urls)
+            & (F.expr("(1000 * n_urls) div n_templates") >= p.trap_ratio_pm))
+            .select("host_key"), "trap_hosts_new")
+        return c.tap("kept", admitted.join(
+            F.broadcast(self.traps_tbl.read_chain().select("host_key")),
+            "host_key", "left_anti"))
 
-        # new-seen count observed on the seen-delta commit's action
-        obs_new = Observation()
+    def _first_seen(self, rc: _Round, tbl: SnapshotTable, hosts: DataFrame,
+                    metric: str) -> None:
+        """Commit the `hosts` (host_key rows) that `tbl`'s chain has not
+        seen yet, stamped with this round as first_round — the
+        first-seen delta the domain and trap tables share — and record
+        the delta's size as `metric`."""
+        if tbl.exists():
+            hosts = hosts.join(tbl.read_chain(), "host_key", "left_anti")
+        delta = rc.counts.tap(metric, hosts.withColumn("first_round",
+                                                       F.lit(rc.r)))
+        rc.versions[tbl.name] = tbl.commit(delta, rc.r)
+        rc.record(metric)
+
+    def _seen(self, rc: _Round, admitted: DataFrame) -> DataFrame:
+        """Phase seen: batch dedup, `filter_new`, host quota, `seen.add`.
+        The seen commit's job carries every admission count; the
+        admission metrics are derived from them here. Returns `new`, the
+        round's cached never-seen rows."""
+        p, c, m = self.params, rc.counts, rc.m
         # bucket under the LIVE spec (self.seen.partitions, not
         # p.seen_partitions): rebucket_target_keys may have evolved the
         # layout since construction
-        newx = self.seen.filter_new(with_bucket(
+        new = self.seen.filter_new(with_bucket(
             batch_dedup(admitted), partitions=self.seen.partitions))
-        # per-host lifetime quota (Heritrix maxDocumentsFromHost): prior
-        # admissions = scheduled-chain rows + live-frontier rows (exactly
-        # every URL that ever passed admission — compaction-safe: the
-        # scheduled chain is never pruned and the live frontier is
-        # admitted-minus-scheduled); within the batch, rank per host in
-        # the SAME deterministic order the first-wins dedup sorts by, and
-        # drop rows past the remaining allowance BEFORE they enter
-        # seen/frontier. Hosts-sized aggregate + one window; the dropped
-        # count rides the seen-commit job as an Observation. Oracle
-        # mirror in ccspark.oracle.
-        obs_cap = None
         if p.max_urls_per_host is not None:
-            prior = None
-            if self.scheduled_tbl.exists():
-                prior = self.scheduled_tbl.read_chain().select("host_key")
-            live0 = self.live_frontier()
-            if live0 is not None:
-                live0 = live0.select("host_key")
-                prior = (prior.unionByName(live0)
-                         if prior is not None else live0)
-            newx = newx.withColumn("_prior", F.lit(0).cast("long"))
-            if prior is not None:
-                counts = prior.groupBy("host_key").agg(
-                    F.count(F.lit(1)).alias("_pc"))
-                newx = (newx.drop("_prior")
-                        .join(counts, "host_key", "left")
-                        .withColumn("_prior", F.coalesce("_pc", F.lit(0)))
-                        .drop("_pc"))
-            w_cap = Window.partitionBy("host_key").orderBy(
-                *order_cols(), F.col("src_doc_id").asc(),
-                F.col("offset").asc())
-            obs_cap = Observation()
-            ranked = newx.withColumn("_hrn", F.row_number().over(w_cap))
-            cap_over = ranked.filter(
-                F.col("_prior") + F.col("_hrn") > p.max_urls_per_host)
-            newx = (ranked
-                    .observe(obs_cap, F.coalesce(F.sum(
-                        (F.col("_prior") + F.col("_hrn")
-                         > p.max_urls_per_host).cast("long")),
-                        F.lit(0)).alias("n"))
-                    .filter(F.col("_prior") + F.col("_hrn")
-                            <= p.max_urls_per_host)
-                    .drop("_prior", "_hrn"))
-        new = (newx
-               .observe(obs_new, F.count(F.lit(1)).alias("n"))
-               .cache())
-        versions = self.seen.add(new, r)
-        if trap_version is not None:
-            versions["traps"] = trap_version
-        m["candidates_in"] = _observed_count(obs_in, candidates)
-        if obs_hx is not None:
-            m["hops_exceeded"] = int(_observed_count(
-                obs_hx, cand_pre.filter(F.col("hop") > p.max_hops)))
-        n_canon = _observed_count(obs_canon, canon)
-        n_adm = _observed_count(obs_adm, pre_trap)
-        m["malformed_dropped"] = m["candidates_in"] - n_canon
-        m["robots_blocked"] = n_canon - n_adm
-        if obs_kept is not None:
-            n_kept = _observed_count(obs_kept, admitted)
+            new = self._host_quota(rc, new)
+        new = rc.cache(c.tap("new_seen", new))
+        rc.versions.update(self.seen.add(new, rc.r))
+        rc.record("candidates_in", "hops_exceeded")
+        n_adm = c["admitted"]
+        m["malformed_dropped"] = m["candidates_in"] - c["canonical"]
+        m["robots_blocked"] = c["canonical"] - n_adm
+        n_kept = c["kept"] if "kept" in c else n_adm
+        if "kept" in c:
             m["trap_dropped"] = n_adm - n_kept
-        else:
-            n_kept = n_adm
-        m["new_seen"] = _observed_count(obs_new, new)
-        n_capped = 0
-        if obs_cap is not None:
-            n_capped = int(_observed_count(obs_cap, cap_over))
-            m["host_cap_dropped"] = n_capped
+        rc.record("new_seen", "host_cap_dropped")
         # dup_dropped stays the PRE-cap dedup count: kept − (admitted
         # post-cap + cap-dropped)
-        m["dup_dropped"] = n_kept - m["new_seen"] - n_capped
+        m["dup_dropped"] = (n_kept - m["new_seen"]
+                            - m.get("host_cap_dropped", 0))
         m["dedup_rate"] = (m["dup_dropped"] / n_kept) if n_kept else 0.0
         # seen-set cardinality as driver arithmetic (like frontier_depth):
         # total = prev − tombstoned (recrawl + revisit removals, both
@@ -497,54 +503,77 @@ class CrawlEngine:
             self._seen_total += (m["new_seen"] - m.get("recrawled", 0)
                                  - m.get("revisited", 0))
         m["seen_total"] = self._seen_total
+        return new
 
-        # U6: first-seen domains delta (anti-join against the domain chain)
-        obs_dom = Observation()
-        new_hosts = new.select("host_key").distinct()
-        if self.domains_tbl.exists():
-            new_hosts = new_hosts.join(self.domains_tbl.read_chain(),
-                                       "host_key", "left_anti")
-        new_hosts = (new_hosts
-                     .withColumn("first_round", F.lit(r))
-                     .observe(obs_dom, F.count(F.lit(1)).alias("n")))
-        versions["domains"] = self.domains_tbl.commit(new_hosts, r)
-        m["new_domains"] = _observed_count(obs_dom, new_hosts)
+    def _host_quota(self, rc: _Round, new: DataFrame) -> DataFrame:
+        """Per-host lifetime quota (Heritrix maxDocumentsFromHost): prior
+        admissions = scheduled-chain rows + live-frontier rows (exactly
+        every URL that ever passed admission — compaction-safe: the
+        scheduled chain is never pruned and the live frontier is
+        admitted-minus-scheduled); within the batch, rank per host in
+        the SAME deterministic order the first-wins dedup sorts by, and
+        drop rows past the remaining allowance BEFORE they enter
+        seen/frontier. Hosts-sized aggregate + one window. Oracle mirror
+        in ccspark.oracle."""
+        cap = self.params.max_urls_per_host
+        sources = [self.live_frontier()]
+        if self.scheduled_tbl.exists():
+            sources.insert(0, self.scheduled_tbl.read_chain())
+        prior = [df.select("host_key") for df in sources if df is not None]
+        if prior:
+            counts = (reduce(DataFrame.unionByName, prior)
+                      .groupBy("host_key").agg(F.count(F.lit(1)).alias("_pc")))
+            new = (new.join(counts, "host_key", "left")
+                   .withColumn("_prior", F.coalesce("_pc", F.lit(0)))
+                   .drop("_pc"))
+        else:
+            new = new.withColumn("_prior", F.lit(0).cast("long"))
+        w_cap = Window.partitionBy("host_key").orderBy(
+            *order_cols(), F.col("src_doc_id").asc(), F.col("offset").asc())
+        ranked = new.withColumn("_hrn", F.row_number().over(w_cap))
+        return (rc.counts.tap("host_cap_dropped", ranked,
+                              F.col("_prior") + F.col("_hrn") > cap)
+                .filter(F.col("_prior") + F.col("_hrn") <= cap)
+                .drop("_prior", "_hrn"))
 
+    def _domains(self, rc: _Round, new: DataFrame) -> None:
+        """Phase domains (U6): first-seen hosts of this round's new rows."""
+        self._first_seen(rc, self.domains_tbl,
+                         new.select("host_key").distinct(), "new_domains")
+
+    def _schedule_fetch(self, rc: _Round, new: DataFrame) -> None:
+        """Phase schedule + fetch: the frontier union, the scheduling
+        priority view (aging, dual-model), the adaptive and group delay
+        tables, `schedule_frontier`, fetch-sim, and the scheduled and
+        frontier commits. Every table here is counted on the scheduled
+        commit's job."""
+        p, c, r = self.params, rc.counts, rc.r
         # The frontier is MERGE-ON-READ: each round commits only its NEW
         # rows as a delta; the live set is (chain − scheduled-since-base),
-        # resolved lazily. Round 1 rewrote the whole remaining frontier
-        # every round — at 10^10 URLs that is a full-frontier write per
-        # round; the delta commit writes O(new URLs) instead, and
-        # compaction (below) periodically materializes the live set as a
-        # 'full' snapshot to bound the subtraction chain (the Iceberg
-        # merge-on-read + rewrite-data-files pattern).
+        # resolved lazily — O(new URLs) written per round instead of the
+        # whole remaining frontier. Compaction (maintenance) periodically
+        # materializes the live set as a 'full' snapshot to bound the
+        # subtraction chain (the Iceberg merge-on-read +
+        # rewrite-data-files pattern).
         new_frontier = new.select(
-            *FRONTIER_COLS,
-            *(["hop"] if p.max_hops is not None else []))
+            *FRONTIER_COLS, *(["hop"] if p.max_hops is not None else []))
         live = self.live_frontier()
-        frontier = (live.unionByName(new_frontier)
-                    if live is not None else new_frontier).cache()
-
+        frontier = rc.cache(live.unionByName(new_frontier)
+                            if live is not None else new_frontier)
         # adaptive politeness: previous round's per-host integer mean
         # latency → delay floor (hosts-sized aggregate, joined into the
-        # budget exactly like the robots cache; its row count is observed
-        # on the scheduled commit — no standalone metric job). Oracle
-        # mirror in ccspark.oracle (exact budgets/offsets/ordering parity
-        # tested).
+        # budget exactly like the robots cache). Oracle mirror in
+        # ccspark.oracle (exact budgets/offsets/ordering parity tested).
         host_delays = None
-        obs_ad = None
         if (p.adaptive_delay_factor_pm is not None and r >= 1
                 and self.scheduled_tbl.exists()):
-            obs_ad = Observation()
-            host_delays = (self.scheduled_tbl.read_chain()
-                           .filter(F.col("fetch_round") == r - 1)
-                           .groupBy("host_key")
-                           .agg(F.expr(
-                               f"(sum(latency_ms) div count(1))"
-                               f" * {p.adaptive_delay_factor_pm} div 1000")
-                               .alias("adaptive_ms"))
-                           .observe(obs_ad, F.count(F.lit(1)).alias("n")))
-
+            host_delays = c.tap("adaptive_hosts", (
+                self.scheduled_tbl.read_chain()
+                .filter(F.col("fetch_round") == r - 1)
+                .groupBy("host_key")
+                .agg(F.expr(f"(sum(latency_ms) div count(1))"
+                            f" * {p.adaptive_delay_factor_pm} div 1000")
+                     .alias("adaptive_ms"))))
         # priority aging (starvation control): the SCHEDULING order uses
         # priority + rounds-waited × boost; the persisted priority column
         # is untouched (aging is an ordering view — recorded tables stay
@@ -552,7 +581,7 @@ class CrawlEngine:
         # Oracle mirror in ccspark.oracle (same int subtract + double
         # multiply-add, same IEEE op order).
         pri_col = "priority"
-        sched_in = frontier  # `frontier` stays bound to the cached union
+        sched_in = frontier
         if p.age_boost_pm is not None:
             sched_in = frontier.withColumn(
                 "_eff", F.col("priority")
@@ -561,35 +590,27 @@ class CrawlEngine:
         # dual-model arbitration ordering (ProcessingService.java:200-222
         # parity, params.dual_model_priority): arbitration-big URLs
         # schedule first via a +1000.0 effective-priority boost over the
-        # (possibly aged) base — ordering view only, persisted priority
-        # untouched; composes with aging in that op order (oracle
-        # mirrors (base + 1000.0) exactly). One Arrow UDF over the
-        # scheduling input; off by default.
+        # (possibly aged) base — ordering view only; composes with aging
+        # in that op order (oracle mirrors (base + 1000.0) exactly).
         if p.dual_model_priority:
             sched_in = sched_in.withColumn(
                 "_eff", F.col(pri_col)
                 + F.when(dual_big_udf(F.col("url"), F.col("priority")),
                          F.lit(1000.0)).otherwise(F.lit(0.0)))
             pri_col = "_eff"
-
         # grouped politeness (per-IP address group or per-registered-
-        # domain site): the group delay table (groups-sized max
-        # aggregate over the frontier; its row count — the group-count
-        # metric — is observed on the scheduled commit). Oracle mirror
-        # in ccspark.oracle.
+        # domain site): a groups-sized max aggregate over the frontier,
+        # counted as the group-count metric. Oracle mirror in
+        # ccspark.oracle.
         ip_delays = None
-        obs_gd = None
         if p.politeness_ip_groups is not None or p.politeness_by_domain:
-            obs_gd = Observation()
-            ip_delays = (group_delays(frontier, self.robots, p, host_delays)
-                         .observe(obs_gd, F.count(F.lit(1)).alias("n")))
-
-        # scheduled count observed on the fetched-table commit; the
-        # scheduled rows carry their fetch offsets already
-        obs_sched = Observation()
-        sched = (schedule_frontier(sched_in, self.robots, p, host_delays,
-                                   ip_delays, pri_col)
-                 .observe(obs_sched, F.count(F.lit(1)).alias("n")))
+            ip_delays = c.tap(
+                "ip_groups" if p.politeness_ip_groups is not None
+                else "domain_groups",
+                group_delays(frontier, self.robots, p, host_delays))
+        # the scheduled rows carry their fetch offsets already
+        sched = c.tap("scheduled", schedule_frontier(
+            sched_in, self.robots, p, host_delays, ip_delays, pri_col))
         fetched = (with_fetch_sim(sched.drop("_eff"),
                                   redirects=p.follow_redirects,
                                   revisit_changed_pct=(
@@ -597,65 +618,47 @@ class CrawlEngine:
                                       if p.revisit_after_rounds is not None
                                       else None))
                    .withColumn("fetch_round", F.lit(r)))
-        obs_nm = None
         if p.revisit_after_rounds is not None:
-            obs_nm = Observation()
-            fetched = fetched.observe(
-                obs_nm, F.coalesce(
-                    F.sum((F.col("status") == 304).cast("long")),
-                    F.lit(0)).alias("n"))
-        versions["scheduled"] = self.scheduled_tbl.commit(fetched, r)
-        m["scheduled"] = _observed_count(obs_sched, sched)
-        if obs_gd is not None:
-            m["ip_groups" if p.politeness_ip_groups is not None
-              else "domain_groups"] = _observed_count(obs_gd, ip_delays)
-        if obs_ad is not None:
-            m["adaptive_hosts"] = _observed_count(obs_ad, host_delays)
-        if obs_nm is not None:
-            m["not_modified"] = int(_observed_count(
-                obs_nm, self.scheduled_tbl.read(versions["scheduled"])
-                .filter(F.col("status") == 304)))
-
-        versions["frontier"] = self.frontier_tbl.commit(
+            fetched = c.tap("not_modified", fetched, F.col("status") == 304)
+        rc.versions["scheduled"] = self.scheduled_tbl.commit(fetched, r)
+        rc.record("scheduled", "ip_groups", "domain_groups",
+                  "adaptive_hosts", "not_modified")
+        rc.versions["frontier"] = self.frontier_tbl.commit(
             new_frontier, r, repartition=(min(p.seen_partitions, 32), "bucket"))
         # arithmetic, not a count job: depth = prev_depth + new − scheduled
-        m["frontier_depth"] = self._prev_depth + m["new_seen"] - m["scheduled"]
-        self._prev_depth = m["frontier_depth"]
+        rc.m["frontier_depth"] = (self._prev_depth + rc.m["new_seen"]
+                                  - rc.m["scheduled"])
+        self._prev_depth = rc.m["frontier_depth"]
 
-        # discovered-pages count observed on the next-candidates commit
-        obs_hits = Observation()
-        hits = (discovered_docs(self.scheduled_tbl.read(versions["scheduled"]),
-                                self.docs,
-                                carry_cols=(("hop",)
-                                            if p.max_hops is not None
-                                            else ()))
-                .observe(obs_hits, F.count(F.lit(1)).alias("n")))
-        # content-digest dedup (params.content_dedup): a page whose span
-        # digest was already seen — any earlier round (digests delta
-        # chain) or earlier in this batch (within-batch winner = smallest
-        # page_url) — keeps its fetch record but does NOT re-extract
-        # links: a mirrored page's outlinks enter the frontier once.
-        # Oracle mirror in ccspark.oracle.
-        obs_cd = None
-        cd_winners = None
-        hits_all = hits  # pre-dedup reference for the obs_hits fallback
+    def _discover(self, rc: _Round) -> None:
+        """Phase discover: fetched pages joined to their documents,
+        content dedup, link extraction and followed redirects, committed
+        as the next round's candidates (whose job carries the counts)."""
+        p, c = self.params, rc.counts
+        fetched = self.scheduled_tbl.read(rc.versions["scheduled"])
+        hits = c.tap("pages_discovered", discovered_docs(
+            fetched, self.docs,
+            carry_cols=("hop",) if p.max_hops is not None else ()))
         if p.content_dedup:
-            hd = hits.withColumn("_dg", F.md5(span_serial_expr()))
+            # content-digest dedup: a page whose span digest was already
+            # seen — any earlier round (digests delta chain) or earlier
+            # in this batch (within-batch winner = smallest page_url) —
+            # keeps its fetch record but does NOT re-extract links: a
+            # mirrored page's outlinks enter the frontier once. Oracle
+            # mirror in ccspark.oracle.
+            hits = hits.withColumn("_dg", F.md5(span_serial_expr()))
             if self.digests_tbl.exists():
-                hd = hd.join(self.digests_tbl.read_chain()
-                             .select(F.col("digest").alias("_dg")),
-                             "_dg", "left_anti")
+                hits = hits.join(self.digests_tbl.read_chain()
+                                 .select(F.col("digest").alias("_dg")),
+                                 "_dg", "left_anti")
             w_dg = Window.partitionBy("_dg").orderBy(F.col("page_url").asc())
-            obs_cd = Observation()
-            cd_winners = (hd.withColumn("_rn", F.row_number().over(w_dg))
-                          .filter(F.col("_rn") == 1).drop("_rn")
-                          .observe(obs_cd, F.count(F.lit(1)).alias("n"))
-                          .cache())
-            versions["digests"] = self.digests_tbl.commit(
-                cd_winners.select(F.col("_dg").alias("digest")), r)
-            hits = cd_winners.drop("_dg")
+            hits = rc.cache(c.tap("content_unique", (
+                hits.withColumn("_rn", F.row_number().over(w_dg))
+                .filter(F.col("_rn") == 1).drop("_rn"))))
+            rc.versions["digests"] = self.digests_tbl.commit(
+                hits.select(F.col("_dg").alias("digest")), rc.r)
+            hits = hits.drop("_dg")
         next_cand = extract_links(hits, follow_links=p.follow_links)
-        obs_redir = None
         if p.follow_redirects:
             # 301 targets re-enter the frontier as candidates with
             # redirect lineage (page_url = the redirecting URL, so a
@@ -664,40 +667,38 @@ class CrawlEngine:
             # → politeness pipeline — a redirect is frontier traffic,
             # not a side channel, which is what keeps ordering total
             # and targets deduped at 10^10 scale
-            obs_redir = Observation()
-            moved = (self.scheduled_tbl.read(versions["scheduled"])
-                     .filter(F.col("status") == 301))
-            redir = candidate_rows(
-                moved, url_raw=F.col("redirect_to"), page_url=F.col("url"),
+            redir = c.tap("redirects_followed", candidate_rows(
+                fetched.filter(F.col("status") == 301),
+                url_raw=F.col("redirect_to"), page_url=F.col("url"),
                 kind=F.lit("redirect"), src_doc_id=F.lit("redirect"),
                 # a followed redirect is one hop (Heritrix counts the
                 # R-hop toward max-hops)
                 hop=((F.col("hop") + F.lit(1)).cast("int")
-                     if p.max_hops is not None else None),
-            ).observe(obs_redir, F.count(F.lit(1)).alias("n"))
+                     if p.max_hops is not None else None)))
             next_cand = next_cand.select(*redir.columns).unionByName(redir)
-        versions["candidates"] = self.candidates_tbl.commit(next_cand, r)
-        m["pages_discovered"] = _observed_count(obs_hits, hits_all)
-        if obs_cd is not None:
-            m["content_dups"] = m["pages_discovered"] - int(
-                _observed_count(obs_cd, cd_winners))
-            cd_winners.unpersist()
-        if obs_redir is not None:
-            m["redirects_followed"] = _observed_count(obs_redir, redir)
+        rc.versions["candidates"] = self.candidates_tbl.commit(next_cand, rc.r)
+        rc.record("pages_discovered")
+        if p.content_dedup:
+            rc.m["content_dups"] = (rc.m["pages_discovered"]
+                                    - c["content_unique"])
+        rc.record("redirects_followed")
 
-        # A13 phase-timer analog: wall time is observability only — never
-        # part of the oracle-checked metric set
-        m["wall_s"] = round(_time.perf_counter() - t0, 3)
-        self.store.commit_round(r, versions, m, batch_id=batch_id)
+    def _maintain(self, rc: _Round, batch_id: int | None) -> None:
+        """Phase maintenance, AFTER the round-log commit (a crash here
+        loses the maintenance, never round data): compaction, the round
+        log re-committed, expiry, rebucket, the round log re-committed.
+        Each re-commit makes the new 'full' versions state of record —
+        without it, rollback_to_last_round (batch resume AND every
+        streaming micro-batch) would treat them as orphans of a crashed
+        attempt and delete them, silently re-growing the chains."""
+        p, r, versions = self.params, rc.r, rc.versions
+        bucketed = (min(p.seen_partitions, 32), "bucket")
         if (p.compact_seen_every is not None
                 and (r + 1) % p.compact_seen_every == 0):
-            # chain maintenance AFTER the round commit: a crash here just
-            # loses the compaction, never round data
             # compact_seen (not raw compact_chain): materializes the
             # RESOLVED set so recrawl tombstones are reclaimed, not
             # carried into the full snapshot forever
-            versions["seen"] = self.seen.compact_seen(
-                r, repartition=(min(p.seen_partitions, 32), "bucket"))
+            versions["seen"] = self.seen.compact_seen(r, repartition=bucketed)
             # filter (bloom/cuckoo): materialize latest-bucket-wins so
             # the delta chain stays bounded (same cadence as the seen chain)
             bv = self.seen.compact_filter(r)
@@ -706,14 +707,8 @@ class CrawlEngine:
             # frontier: materialize the live set as a 'full' snapshot so
             # the merge-on-read subtraction chain stays bounded
             versions["frontier"] = self.frontier_tbl.commit(
-                self.live_frontier(), r, kind="full",
-                repartition=(min(p.seen_partitions, 32), "bucket"))
-            # RE-commit the round log with the compacted versions —
-            # without this, rollback_to_last_round (batch resume AND
-            # every streaming micro-batch) treats the compaction
-            # snapshots as orphans of a crashed attempt and deletes
-            # them, silently re-growing the chains it just bounded.
-            self.store.commit_round(r, versions, m, batch_id=batch_id)
+                self.live_frontier(), r, kind="full", repartition=bucketed)
+            self.store.commit_round(r, versions, rc.m, batch_id=batch_id)
             if p.expire_keep_last is not None:
                 # history GC after the re-commit: the fresh 'full'
                 # snapshots are now the chain bases, so everything
@@ -724,30 +719,17 @@ class CrawlEngine:
                     tbl.expire_snapshots(p.expire_keep_last)
                     tbl.remove_orphans()
         # automatic partition evolution (params.rebucket_target_keys):
-        # grow the bucket count when keys/bucket exceeds the target —
-        # a layout-only maintenance op AFTER the round commit (a crash
-        # here loses the evolution, never round data); the round log is
-        # RE-committed with the new 'full' versions so resume/rollback
-        # treats them as state of record, not orphans (the compaction
-        # discipline above).
+        # grow the bucket count when keys/bucket exceeds the target, read
+        # off the running seen_total scalar — NOT a standalone O(total)
+        # count() job per round
         if p.rebucket_target_keys is not None:
-            # the running scalar (observed counts riding the round's own
-            # jobs) — NOT a standalone O(total) count() job per round
-            n_seen = self._seen_total
             newp = self.seen.partitions
-            while n_seen > p.rebucket_target_keys * newp:
+            while self._seen_total > p.rebucket_target_keys * newp:
                 newp *= 2
             if newp != self.seen.partitions:
-                rb = self.seen.rebucket(newp, r)
-                versions.update(rb)
-                m["rebucketed_to"] = newp
-                self.store.commit_round(r, versions, m, batch_id=batch_id)
-        for df in ((new, frontier)
-                   + ((stale,) if stale is not None else ())
-                   + ((fresh,) if fresh is not None else ())
-                   + ((cached_adm,) if cached_adm is not None else ())):
-            df.unpersist()
-        return self.candidates_tbl.read(versions["candidates"])
+                versions.update(self.seen.rebucket(newp, r))
+                rc.m["rebucketed_to"] = newp
+                self.store.commit_round(r, versions, rc.m, batch_id=batch_id)
 
     def live_frontier(self) -> DataFrame | None:
         """The unscheduled frontier, resolved merge-on-read: the delta

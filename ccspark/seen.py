@@ -68,6 +68,9 @@ FILTER_SCHEMA = T.StructType([
 FILTER_ROW_SCHEMA = T.StructType(
     FILTER_SCHEMA.fields + [T.StructField("v", T.LongType())])
 
+# a kernel's answer for a bucket it leaves as it is
+_NO_ROWS = pd.DataFrame({c: [] for c in FILTER_SCHEMA.names})
+
 
 def _bit_positions(urls: pd.Series, m_bits: int, k: int) -> np.ndarray:
     """(len(urls), k) bloom bit indices — fully vectorized (pandas'
@@ -106,6 +109,19 @@ def _fold_blob(urls: pd.Series, blob: bytes | None, kind: str,
         bits = np.zeros(m, dtype=np.uint8)
     bits[_bit_positions(urls, m, k).ravel()] = 1
     return np.packbits(bits).tobytes()
+
+
+def _build_kernel(kind: str, m: int, k: int, nbuck: int):
+    """(key, urls_pdf) → the bucket's filter row folded from empty over
+    exactly those urls (n = their count). Rebucket builds every bucket
+    with it; the bloom removal rebuilds the touched buckets from their
+    survivors (no survivors → an empty bitmap, n = 0)."""
+    def build(key, urls_pdf):
+        return pd.DataFrame({
+            "bucket": [key[0]],
+            "bitmap": [_fold_blob(urls_pdf["url"], None, kind, m, k, nbuck)],
+            "n": [len(urls_pdf)]})
+    return build
 
 
 def _delete_blob(urls: pd.Series, blob: bytes) -> tuple[bytes, int]:
@@ -188,23 +204,14 @@ class SeenSet:
         self.partitions, self.nbuck = self._ctor_spec
         return self.restore_spec()
 
-    def _chain_has_tombstones(self, version: int | None = None) -> bool:
+    def _chain_has_tombstones(self, live: list[dict] | None = None) -> bool:
         """Driver-side manifest scan: any tombstone delta in the live
-        chain? Lets the common (no-recrawl) crawl loop keep its
-        resolution-free read path — no groupBy on a chain that is pure
-        appends."""
-        t = self.seen_tbl
-        if version is None:
-            version = t.latest_version()
-        if version is None:
-            return False
-        vs = [v for v in t.versions() if v <= version]
-        base = 0
-        for v in vs:
-            if t.meta(v).get("kind") == "full":
-                base = v
-        return any(t.meta(v).get("metrics", {}).get("tombstones")
-                   for v in vs if v >= base)
+        chain (`live`, its manifests; the latest chain when omitted)?
+        Lets the common (no-recrawl) crawl loop keep its resolution-free
+        read path — no groupBy on a chain that is pure appends."""
+        if live is None:
+            live = self.seen_tbl.chain()
+        return any(meta.get("metrics", {}).get("tombstones") for meta in live)
 
     def seen_df(self, version: int | None = None) -> DataFrame | None:
         """The exact set of record, resolved merge-on-read over the delta
@@ -217,10 +224,11 @@ class SeenSet:
         matching the engine's remove-then-add round sequence. The
         resolve shuffle is paid only when the live chain actually holds
         tombstones (manifest flag)."""
-        if not self.seen_tbl.exists():
+        live = self.seen_tbl.chain(version)
+        if not live:
             return None
-        chain = self.seen_tbl.read_chain(version)
-        if not self._chain_has_tombstones(version):
+        chain = self.seen_tbl.scan(live)
+        if not self._chain_has_tombstones(live):
             return chain.drop("deleted") if "deleted" in chain.columns else chain
         key = F.struct(F.col("first_round").alias("r"),
                        (~F.col("deleted")).cast("int").alias("add"))
@@ -274,6 +282,16 @@ class SeenSet:
         return self.filter_tbl.commit(
             resolved, round_no, kind="full",
             repartition=(min(self.partitions, 64), "bucket"))
+
+    def _commit_filter(self, rows: DataFrame, round_no: int,
+                       **kw) -> dict[str, int]:
+        """Commit per-bucket filter rows stamped with the version they
+        will land in (`v`, the latest-bucket-wins key), bucketed under
+        the live spec. Returns {filter table name: version}."""
+        next_v = (self.filter_tbl.latest_version() or 0) + 1
+        return {self.filter_name: self.filter_tbl.commit(
+            rows.withColumn("v", F.lit(next_v).cast("long")), round_no,
+            repartition=(min(self.partitions, 64), "bucket"), **kw)}
 
     # -- vectorized per-bucket kernels ---------------------------------------
     # module-level _probe_blob/_fold_blob/_delete_blob are parameterized by
@@ -342,8 +360,7 @@ class SeenSet:
                     # bucket present only on the filter side (can't happen
                     # after the semi-join below, but keep fold total):
                     # nothing new → emit nothing, the old row stays live
-                    return pd.DataFrame(
-                        {c: [] for c in ("bucket", "bitmap", "n")})
+                    return _NO_ROWS
                 blob = filt_pdf["bitmap"].iloc[0] if len(filt_pdf) else None
                 n = int(filt_pdf["n"].iloc[0]) if len(filt_pdf) else 0
                 return pd.DataFrame({
@@ -367,10 +384,7 @@ class SeenSet:
             folded = (new_urls.groupBy("bucket")
                       .cogroup(filt.drop("v").groupBy("bucket"))
                       .applyInPandas(fold, schema=FILTER_SCHEMA))
-            next_v = (self.filter_tbl.latest_version() or 0) + 1
-            versions[self.filter_name] = self.filter_tbl.commit(
-                folded.withColumn("v", F.lit(next_v).cast("long")),
-                round_no, repartition=(min(self.partitions, 64), "bucket"))
+            versions.update(self._commit_filter(folded, round_no))
         return versions
 
     # -- recrawl: remove URLs from the seen set ------------------------------
@@ -435,8 +449,7 @@ class SeenSet:
 
                 def upd(key, rm_pdf, filt_pdf):
                     if len(filt_pdf) == 0 or len(rm_pdf) == 0:
-                        return pd.DataFrame(
-                            {c: [] for c in ("bucket", "bitmap", "n")})
+                        return _NO_ROWS
                     blob, n_del = _delete_blob(rm_pdf["url"],
                                                filt_pdf["bitmap"].iloc[0])
                     n = max(0, int(filt_pdf["n"].iloc[0]) - n_del)
@@ -447,16 +460,12 @@ class SeenSet:
                            .cogroup(filt.drop("v").groupBy("bucket"))
                            .applyInPandas(upd, schema=FILTER_SCHEMA))
             else:
+                build = _build_kernel(kind, m, k, nbuck)
 
                 def upd(key, touched_pdf, surv_pdf):
                     if len(touched_pdf) == 0:
-                        return pd.DataFrame(
-                            {c: [] for c in ("bucket", "bitmap", "n")})
-                    return pd.DataFrame({
-                        "bucket": [key[0]],
-                        "bitmap": [_fold_blob(surv_pdf["url"], None,
-                                              kind, m, k, nbuck)],
-                        "n": [len(surv_pdf)]})
+                        return _NO_ROWS
+                    return build(key, surv_pdf)
 
                 survivors = seen.join(removed.select("url"), "url", "left_anti")
                 surv_urls = survivors.select("bucket", "url")
@@ -465,10 +474,7 @@ class SeenSet:
                                     .join(touched, "bucket", "left_semi")
                                     .groupBy("bucket"))
                            .applyInPandas(upd, schema=FILTER_SCHEMA))
-            next_v = (self.filter_tbl.latest_version() or 0) + 1
-            versions[self.filter_name] = self.filter_tbl.commit(
-                updated.withColumn("v", F.lit(next_v).cast("long")),
-                round_no, repartition=(min(self.partitions, 64), "bucket"))
+            versions.update(self._commit_filter(updated, round_no))
             return versions
         finally:
             removed.unpersist()
@@ -526,23 +532,9 @@ class SeenSet:
             repartition=(min(new_partitions, 32), "bucket"))}
         if not self.kind:
             return versions
-        kind, m, k, nbuck = self._kernel_params()
-
-        def build(key, urls_pdf):
-            if len(urls_pdf) == 0:
-                return pd.DataFrame(
-                    {c: [] for c in ("bucket", "bitmap", "n")})
-            return pd.DataFrame({
-                "bucket": [key[0]],
-                "bitmap": [_fold_blob(urls_pdf["url"], None,
-                                      kind, m, k, nbuck)],
-                "n": [len(urls_pdf)]})
-
         built = (re_rows.select("bucket", "url").groupBy("bucket")
-                 .applyInPandas(build, schema=FILTER_SCHEMA))
-        next_v = (self.filter_tbl.latest_version() or 0) + 1
-        versions[self.filter_name] = self.filter_tbl.commit(
-            built.withColumn("v", F.lit(next_v).cast("long")),
-            round_no, kind="full", metrics=spec,
-            repartition=(min(new_partitions, 64), "bucket"))
+                 .applyInPandas(_build_kernel(*self._kernel_params()),
+                                schema=FILTER_SCHEMA))
+        versions.update(self._commit_filter(built, round_no, kind="full",
+                                            metrics=spec))
         return versions

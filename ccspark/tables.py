@@ -57,18 +57,17 @@ class SnapshotTable:
 
     # -- commit / read -----------------------------------------------------
 
-    def schema(self, version: int) -> T.StructType:
-        """The version's schema of record, from its manifest. A manifest
-        written before schemas were recorded has none; that version's
-        schema is inferred from its parquet footers once (one Spark job)
-        and remembered."""
-        meta = self.meta(version)
+    def schema(self, meta: dict) -> T.StructType:
+        """The schema of record of the version whose manifest is `meta`.
+        A manifest written before schemas were recorded has none; that
+        version's schema is inferred from its parquet footers once (one
+        Spark job) and remembered."""
         if "schema" in meta:
             return T.StructType.fromJson(json.loads(meta["schema"]))
-        key = (version, meta.get("committed_at"))
+        key = (meta["version"], meta.get("committed_at"))
         if key not in self._inferred:
             self._inferred[key] = self.spark.read.parquet(
-                os.path.join(self.dir, f"v{version}")).schema
+                os.path.join(self.dir, f"v{meta['version']}")).schema
         return self._inferred[key]
 
     def commit(self, df: DataFrame, round_no: int, metrics: dict | None = None,
@@ -139,51 +138,58 @@ class SnapshotTable:
             version = self.latest_version()
         if version is None:
             raise FileNotFoundError(f"no snapshots for table {self.name}")
-        return (self.spark.read.schema(self.schema(version))
+        return (self.spark.read.schema(self.schema(self.meta(version)))
                 .parquet(os.path.join(self.dir, f"v{version}")))
+
+    def chain(self, version: int | None = None) -> list[dict]:
+        """Manifests of the live chain at `version` (latest by default):
+        the last 'full' snapshot ≤ version and every delta after it,
+        oldest first ([] when no snapshot ≤ version exists). One
+        directory listing, and each live manifest is opened once — the
+        walk goes newest-first and stops at the base. Nothing is cached
+        between calls: version numbers are reused after `rollback_to`,
+        and another writer may commit in between."""
+        out = []
+        for v in reversed(self.versions()):
+            if version is not None and v > version:
+                continue
+            out.append(self.meta(v))
+            if out[-1].get("kind") == "full":
+                break
+        return out[::-1]
+
+    def scan(self, manifests: list[dict]) -> DataFrame:
+        """The union of the snapshots `manifests` name, read under the
+        union of their schemas of record in first-seen order (Iceberg
+        add-column semantics: a column a later delta added reads as NULL
+        in earlier rows)."""
+        if not manifests:
+            raise FileNotFoundError(f"no snapshots for table {self.name}")
+        fields: dict[str, T.StructField] = {}
+        for meta in manifests:
+            for f in self.schema(meta).fields:
+                fields.setdefault(f.name, f)
+        return (self.spark.read.schema(T.StructType(list(fields.values())))
+                .parquet(*[os.path.join(self.dir, f"v{meta['version']}")
+                           for meta in manifests]))
 
     def read_chain(self, version: int | None = None) -> DataFrame:
         """Append-mode read: the UNION of delta snapshots since (and
         including) the last 'full' snapshot ≤ version. Used for
         append-only tables (the seen set) so each round commits only its
         delta instead of rewriting history — the Iceberg append analog;
-        compaction (`compact_chain`) bounds the chain length. The read
-        schema is the union of the live versions' schemas of record."""
-        if version is None:
-            version = self.latest_version()
-        if version is None:
-            raise FileNotFoundError(f"no snapshots for table {self.name}")
-        vs = [v for v in self.versions() if v <= version]
-        base = 0
-        for v in vs:
-            if self.meta(v).get("kind") == "full":
-                base = v
-        live = [v for v in vs if v >= base]
-        paths = [os.path.join(self.dir, f"v{v}") for v in live]
-        # schema evolution (Iceberg add-column semantics): the read schema
-        # is the union of the live versions' fields in first-seen order,
-        # so a column a later delta added reads as NULL in earlier rows
-        fields: dict[str, T.StructField] = {}
-        for v in live:
-            for f in self.schema(v).fields:
-                fields.setdefault(f.name, f)
-        return (self.spark.read.schema(T.StructType(list(fields.values())))
-                .parquet(*paths))
+        compaction (`compact_chain`) bounds the chain length."""
+        return self.scan(self.chain(version))
 
     def chain_base_round(self, version: int | None = None) -> int:
         """Round of the 'full' snapshot the live chain is based on
         (-1 when the chain starts from empty) — lets a reader subtract
         only the deltas that postdate the base (the frontier's
         merge-on-read bookkeeping)."""
-        if version is None:
-            version = self.latest_version()
-        if version is None:
-            return -1
-        base = -1
-        for v in self.versions():
-            if v <= version and self.meta(v).get("kind") == "full":
-                base = self.meta(v)["round"]
-        return base
+        live = self.chain(version)
+        if live and live[0].get("kind") == "full":
+            return live[0]["round"]
+        return -1
 
     def compact_chain(self, round_no: int,
                       repartition: tuple | None = None) -> int:
@@ -215,14 +221,10 @@ class SnapshotTable:
         vs = self.versions()
         if not vs or keep_last < 1:
             return []
-        keep = set(vs[-keep_last:])
-        fulls = [v for v in vs if self.meta(v).get("kind") == "full"]
-        for v in list(keep):
-            base = 0
-            for f in fulls:
-                if f <= v:
-                    base = f
-            keep.update(x for x in vs if base <= x <= v)
+        # the retained versions are the newest keep_last, so the chain of
+        # the oldest one reaches every base the others need
+        kept = vs[-keep_last:]
+        keep = set(kept) | {meta["version"] for meta in self.chain(kept[0])}
         now = time.time()
         expired = []
         for v in vs:

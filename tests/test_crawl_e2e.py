@@ -62,6 +62,10 @@ class TestEngineMatchesOracle:
         _, metrics = engine
         assert len(metrics) == len(oracle_small.metrics)
         for got, want in zip(metrics, oracle_small.metrics):
+            # the whole key set, not only METRIC_KEYS: a round that drops
+            # or adds an optional metric fails here
+            assert set(got) - {"wall_s", "rebucketed_to"} == set(want), (
+                f"round {got['round']} metric keys")
             for k in METRIC_KEYS:
                 assert got[k] == want[k], f"round {got['round']} metric {k}"
 

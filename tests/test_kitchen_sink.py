@@ -93,6 +93,11 @@ def test_seen_and_metrics(engine, oracle):
             eng.seen.seen_df().select("url", "first_round").collect()}
     assert seen == oracle.seen
     for got, want in zip(metrics, oracle.metrics):
+        # every policy's optional metric is present exactly when the
+        # oracle records it (wall time and the layout change are
+        # engine-only)
+        assert set(got) - {"wall_s", "rebucketed_to"} == set(want), (
+            f"round {got['round']} metric keys")
         for k in METRIC_KEYS:
             if k not in want and k not in got:
                 continue

@@ -154,6 +154,25 @@ class TestSeenRoundPlans:
                 == {r.url for r in urls.filter("url >= 'http://h/2'")
                     .collect()})
 
+    @staticmethod
+    def _round1_jobs(spark, fx, tmp_path, params, **kw) -> int:
+        """Spark jobs round 1 of the crawl fixture runs (round 0 first,
+        untagged)."""
+        from ccspark.scheduler import CrawlEngine, seeds_to_candidates
+
+        eng = CrawlEngine(spark, str(tmp_path / "st"), fx["documents"],
+                          fx["seeds"], fx["robots"], params=params, **kw)
+        sc = spark.sparkContext
+        cand = eng.run_round(0, seeds_to_candidates(
+            spark.read.parquet(fx["seeds"])))
+        group = f"round-budget-{tmp_path.name}"
+        sc.setJobGroup(group, "round 1 job budget", False)
+        try:
+            eng.run_round(1, cand)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
     def test_round_job_budget(self, spark, fx_small, tmp_path):
         """Round 1 of the crawl fixture runs at most 27 Spark jobs. Each
         of three wastes adds jobs: a second bloom probe (union branches),
@@ -162,22 +181,23 @@ class TestSeenRoundPlans:
         stops reusing the cached `new` (canonicalize and its broadcasts
         would run again)."""
         from ccspark.params import CrawlParams
-        from ccspark.scheduler import CrawlEngine, seeds_to_candidates
 
-        eng = CrawlEngine(spark, str(tmp_path / "st"), fx_small["documents"],
-                          fx_small["seeds"], fx_small["robots"],
-                          params=CrawlParams(rounds=2))
-        sc = spark.sparkContext
-        cand = eng.run_round(0, seeds_to_candidates(
-            spark.read.parquet(fx_small["seeds"])))
-        group = f"round-budget-{tmp_path.name}"
-        sc.setJobGroup(group, "round 1 job budget", False)
-        try:
-            eng.run_round(1, cand)
-        finally:
-            sc.setLocalProperty("spark.jobGroup.id", None)
-        jobs = sc.statusTracker().getJobIdsForGroup(group)
-        assert 0 < len(jobs) <= 27, f"{len(jobs)} jobs in round 1"
+        jobs = self._round1_jobs(spark, fx_small, tmp_path,
+                                 CrawlParams(rounds=2))
+        assert 0 < jobs <= 27, f"{jobs} jobs in round 1"
+
+    def test_policy_round_job_budget(self, spark, fx_small, tmp_path):
+        """Round 1 under the kitchen-sink params (every optional policy
+        on; host quota, traps, PageRank, adaptive and domain delays,
+        content dedup, compaction, expiry and rebucket all run in it)
+        takes at most 83 Spark jobs, the count measured when the round
+        was split into phases: no policy may add a standalone metric
+        job."""
+        from test_kitchen_sink import PARAMS
+
+        jobs = self._round1_jobs(spark, fx_small, tmp_path, PARAMS,
+                                 filter_kind=None)
+        assert 0 < jobs <= 83, f"{jobs} jobs in round 1"
 
 
 class TestDedupPlans:

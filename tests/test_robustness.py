@@ -6,9 +6,10 @@ from __future__ import annotations
 import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
+from pyspark.sql import functions as F
 
 from ccspark.params import CrawlParams
-from ccspark.scheduler import CrawlEngine
+from ccspark.scheduler import CrawlEngine, seeds_to_candidates
 
 
 def _write_empty_seeds(path):
@@ -147,3 +148,66 @@ class TestCrashPointMatrix:
                     eng_k.seen.seen_df().select("url", "first_round")
                     .collect()}
             assert seen == want.seen, f"crash point {k}"
+
+
+def _cache_entries(spark) -> int:
+    """Entries in the session's cache manager (its private list, read
+    through reflection — no public accessor exposes the count)."""
+    cm = spark._jsparkSession.sharedState().cacheManager()
+    field = cm.getClass().getDeclaredField("cachedData")
+    field.setAccessible(True)
+    return field.get(cm).size()
+
+
+def test_failed_round_unpersists_its_frames(spark, fx_small, tmp_path,
+                                            monkeypatch):
+    """A round that raises (a streaming micro-batch that fails and is
+    redelivered to the same engine) leaves no frame it cached behind."""
+    from ccspark.tables import SnapshotTable
+
+    eng = CrawlEngine(spark, str(tmp_path / "st"), fx_small["documents"],
+                      fx_small["seeds"], fx_small["robots"],
+                      params=CrawlParams(rounds=1))
+    real_commit = SnapshotTable.commit
+
+    def failing_commit(self, df, round_no, *a, **kw):
+        if self.name == "scheduled":
+            raise OSError("injected scheduled-commit failure")
+        return real_commit(self, df, round_no, *a, **kw)
+
+    before = _cache_entries(spark)
+    monkeypatch.setattr(SnapshotTable, "commit", failing_commit)
+    with pytest.raises(OSError, match="injected"):
+        eng.run_round(0, seeds_to_candidates(
+            spark.read.parquet(fx_small["seeds"])))
+    assert _cache_entries(spark) <= before
+
+
+def test_observed_count_falls_back_when_metrics_are_pruned(spark):
+    """With AQE's empty-relation propagation on, a frame observed below
+    a join whose other side is empty loses its CollectMetrics node:
+    reading the observation raises, and the round's count helper counts
+    the frame itself instead."""
+    from ccspark.scheduler import _Counts
+
+    key = "spark.sql.adaptive.optimizer.excludedRules"
+    saved = spark.conf.get(key, None)
+    spark.conf.set(key, "")
+    try:
+        counts = _Counts()
+        left = counts.tap("left", spark.range(10).withColumnRenamed("id", "k"))
+        hops = counts.tap("hops", spark.range(10).withColumnRenamed("id", "k"),
+                          F.col("k") >= 7)
+        empty = spark.range(10).filter("id < 0").withColumnRenamed("id", "k")
+        assert left.join(empty, "k").count() == 0
+        assert hops.join(empty, "k").count() == 0
+        obs, _ = counts._taps["left"]
+        with pytest.raises(Exception):
+            obs.get
+        assert counts["left"] == 10
+        assert counts["hops"] == 3
+    finally:
+        if saved is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, saved)

@@ -92,3 +92,35 @@ def test_manifest_without_schema_still_reads(spark, tmp_path):
     assert sc.statusTracker().getJobIdsForGroup(group) == []
     assert again == [["url", "a", "hop"], ["url", "a"]]
     assert [r.a for r in t.read(1).collect()] == [1]
+
+
+def test_read_chain_opens_each_manifest_once(spark, tmp_path, monkeypatch):
+    """read_chain walks the chain once: one open per live manifest (the
+    kind check and the schema of record share it), and none for the
+    versions behind a 'full' base."""
+    import builtins
+
+    t = SnapshotStore(spark, str(tmp_path / "st")).table("t")
+    for i in range(4):
+        t.commit(spark.createDataFrame([(f"u{i}", i)], "url string, a int"), i)
+    opened = []
+    real_open = builtins.open
+
+    def counting_open(path, *a, **kw):
+        if os.path.dirname(str(path)) == t.snap_dir:
+            opened.append(os.path.basename(str(path)))
+        return real_open(path, *a, **kw)
+
+    monkeypatch.setattr(builtins, "open", counting_open)
+    t.read_chain()
+    assert sorted(opened) == ["v1.json", "v2.json", "v3.json", "v4.json"]
+    monkeypatch.setattr(builtins, "open", real_open)
+
+    t.compact_chain(4)
+    t.commit(spark.createDataFrame([("u5", 5)], "url string, a int"), 5)
+    opened.clear()
+    monkeypatch.setattr(builtins, "open", counting_open)
+    df = t.read_chain()
+    monkeypatch.setattr(builtins, "open", real_open)
+    assert sorted(opened) == ["v5.json", "v6.json"]
+    assert {r.url for r in df.collect()} == {"u0", "u1", "u2", "u3", "u5"}
