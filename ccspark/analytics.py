@@ -17,6 +17,7 @@ Cross-engine determinism rules used throughout (see tests/test_queries_oracle.py
 
 from __future__ import annotations
 
+import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 # ---------------------------------------------------------------------------
@@ -671,7 +672,6 @@ def _mg_partition(batches):
         if len(counters) > HH_M:
             cut = sorted(counters.values(), reverse=True)[HH_M]
             counters = {k: v - cut for k, v in counters.items() if v > cut}
-    import pandas as pd
     rows = [(wrd, 0) for wrd in counters] + [("", n_p)]
     yield pd.DataFrame(rows, columns=["word", "n_p"])
 
@@ -683,8 +683,11 @@ def q_heavy_hitters(spark, sf_dir):
     summary = words.mapInPandas(
         _mg_partition, schema="word string, n_p long").collect()
     n_total = sum(r.n_p for r in summary if r.word == "")
+    # the sentinel '' (no word row carries it) keeps the candidates a
+    # non-empty pandas frame, a LocalRelation: a list or an empty frame
+    # would scan a Python RDD and start a second Python worker pool
     cands = spark.createDataFrame(
-        [(w,) for w in sorted({r.word for r in summary if r.word != ""})],
+        pd.DataFrame({"word": sorted({""} | {r.word for r in summary})}),
         "word string")
     exact = (words.join(F.broadcast(cands), "word", "left_semi")
              .groupBy("word").agg(F.count(F.lit(1)).alias("cnt")))

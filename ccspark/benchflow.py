@@ -70,9 +70,13 @@ def schedule_pipeline(spark: SparkSession, n: int,
                       params: CrawlParams = CrawlParams(),
                       start: int = 0) -> int:
     """One full scheduling round's compute over n synthetic candidates;
-    returns URLs scheduled. Empty robots cache → default crawl delay."""
-    robots = spark.createDataFrame(
-        [], "host string, crawl_delay double, disallow array<string>")
+    returns URLs scheduled. Empty robots cache → default crawl delay
+    (built JVM-side: an empty Python-rows frame would start a second
+    Python worker pool)."""
+    robots = spark.range(0).select(
+        F.lit(None).cast("string").alias("host"),
+        F.lit(None).cast("double").alias("crawl_delay"),
+        F.lit(None).cast("array<string>").alias("disallow"))
     cand = synthetic_candidates(spark, n, start=start)
     canon = canonicalize(cand, round_no=0)
     deduped = with_bucket(batch_dedup(canon), partitions=params.seen_partitions)

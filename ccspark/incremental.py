@@ -110,10 +110,10 @@ def q_incremental_word_count(spark, sf_dir):
             if rnd == 1:
                 agg.compact(rnd)
         out = agg.read().select("word", F.col("cnt").alias("n"))
-        # materialize before the tempdir vanishes — bounded at the
-        # distinct-word count (the aggregate, not the corpus); production
-        # keeps the state dir and returns the lazy merge-on-read plan
-        out = spark.createDataFrame(out.collect(), out.schema)
+        # materialize before the tempdir vanishes, on the executors (no
+        # round trip through the driver); production keeps the state dir
+        # and returns the lazy merge-on-read plan
+        out = out.localCheckpoint()
     finally:
         shutil.rmtree(root, ignore_errors=True)
     return out

@@ -354,10 +354,12 @@ class CrawlEngine:
         verbatim (a re-fetch is the same URL at the same link distance);
         `lineage` sets src_doc_id/offset. A no-op when the policy is off
         or not yet due. Oracle mirror in ccspark.oracle."""
-        if k is None or rc.r < k or not self.scheduled_tbl.exists():
+        sched = (self.scheduled_tbl.chain() if k is not None and rc.r >= k
+                 else [])
+        if not sched:
             return candidates
         rows = rc.cache(rc.counts.tap(
-            metric, self.scheduled_tbl.read_chain()
+            metric, self.scheduled_tbl.scan(sched)
             .filter((F.col("fetch_round") == rc.r - k) & status_pred)))
         self.seen.remove(rows.select("url"), rc.r)
         rc.record(metric)
@@ -447,8 +449,9 @@ class CrawlEngine:
         seen yet, stamped with this round as first_round — the
         first-seen delta the domain and trap tables share — and record
         the delta's size as `metric`."""
-        if tbl.exists():
-            hosts = hosts.join(tbl.read_chain(), "host_key", "left_anti")
+        live = tbl.chain()
+        if live:
+            hosts = hosts.join(tbl.scan(live), "host_key", "left_anti")
         delta = rc.counts.tap(metric, hosts.withColumn("first_round",
                                                        F.lit(rc.r)))
         rc.versions[tbl.name] = tbl.commit(delta, rc.r)
@@ -517,8 +520,9 @@ class CrawlEngine:
         in ccspark.oracle."""
         cap = self.params.max_urls_per_host
         sources = [self.live_frontier()]
-        if self.scheduled_tbl.exists():
-            sources.insert(0, self.scheduled_tbl.read_chain())
+        sched = self.scheduled_tbl.chain()
+        if sched:
+            sources.insert(0, self.scheduled_tbl.scan(sched))
         prior = [df.select("host_key") for df in sources if df is not None]
         if prior:
             counts = (reduce(DataFrame.unionByName, prior)
@@ -565,10 +569,12 @@ class CrawlEngine:
         # budget exactly like the robots cache). Oracle mirror in
         # ccspark.oracle (exact budgets/offsets/ordering parity tested).
         host_delays = None
-        if (p.adaptive_delay_factor_pm is not None and r >= 1
-                and self.scheduled_tbl.exists()):
+        prior = (self.scheduled_tbl.chain()
+                 if p.adaptive_delay_factor_pm is not None and r >= 1
+                 else [])
+        if prior:
             host_delays = c.tap("adaptive_hosts", (
-                self.scheduled_tbl.read_chain()
+                self.scheduled_tbl.scan(prior)
                 .filter(F.col("fetch_round") == r - 1)
                 .groupBy("host_key")
                 .agg(F.expr(f"(sum(latency_ms) div count(1))"
@@ -647,8 +653,9 @@ class CrawlEngine:
             # mirrored page's outlinks enter the frontier once. Oracle
             # mirror in ccspark.oracle.
             hits = hits.withColumn("_dg", F.md5(span_serial_expr()))
-            if self.digests_tbl.exists():
-                hits = hits.join(self.digests_tbl.read_chain()
+            digests = self.digests_tbl.chain()
+            if digests:
+                hits = hits.join(self.digests_tbl.scan(digests)
                                  .select(F.col("digest").alias("_dg")),
                                  "_dg", "left_anti")
             w_dg = Window.partitionBy("_dg").orderBy(F.col("page_url").asc())
@@ -735,14 +742,16 @@ class CrawlEngine:
         """The unscheduled frontier, resolved merge-on-read: the delta
         chain minus scheduled rows committed since the chain's 'full'
         base snapshot (None before any round)."""
-        if not self.frontier_tbl.exists():
+        live = self.frontier_tbl.chain()
+        if not live:
             return None
-        chain = self.frontier_tbl.read_chain()
-        if self.scheduled_tbl.exists():
-            base = self.frontier_tbl.chain_base_round()
-            sched = (self.scheduled_tbl.read_chain()
-                     .filter(F.col("fetch_round") > base).select("url"))
-            chain = chain.join(sched, "url", "left_anti")
+        chain = self.frontier_tbl.scan(live)
+        sched = self.scheduled_tbl.chain()
+        if sched:
+            base = SnapshotTable.base_round(live)
+            chain = chain.join(self.scheduled_tbl.scan(sched)
+                               .filter(F.col("fetch_round") > base)
+                               .select("url"), "url", "left_anti")
         return chain
 
     # -- full run --------------------------------------------------------------

@@ -36,6 +36,17 @@ are bookkept separately):
    cost a redundant join match; false negatives are impossible
    (property tests for both kinds).
 
+   A fresh store has no filter rows yet, so its first fold builds each
+   touched bucket from empty with the kernel rebucket uses; later
+   rounds cogroup the new URLs against the touched buckets' rows.
+
+Engine paths never build a frame from Python rows (a list, or an empty
+pandas frame; a non-empty pandas frame plans as a LocalRelation and is
+fine): PySpark plans such a frame as a LogicalRDD over a Python RDD,
+and scanning it starts a second worker pool of nproc idle Python
+workers that lives for the rest of the session — about 290 MB on
+4 cores, growing with the core count.
+
 Scale arithmetic (BASELINE.md): P=256 buckets. At bench (1e6 URLs) each
 bloom bitmap is 2^20 bits = 128 KiB → 32 MiB total. At 1e10 URLs: 39e6
 keys/bucket × ~10 bits ≈ 48 MiB/bucket ≈ 12 GiB total (bloom) or
@@ -61,12 +72,6 @@ FILTER_SCHEMA = T.StructType([
     T.StructField("bitmap", T.BinaryType()),
     T.StructField("n", T.LongType()),
 ])
-
-# persisted rows additionally carry the snapshot version that wrote them
-# (latest-bucket-wins on read), so each round commits ONLY the buckets
-# that received new URLs as a delta instead of rewriting every blob
-FILTER_ROW_SCHEMA = T.StructType(
-    FILTER_SCHEMA.fields + [T.StructField("v", T.LongType())])
 
 # a kernel's answer for a bucket it leaves as it is
 _NO_ROWS = pd.DataFrame({c: [] for c in FILTER_SCHEMA.names})
@@ -114,8 +119,9 @@ def _fold_blob(urls: pd.Series, blob: bytes | None, kind: str,
 def _build_kernel(kind: str, m: int, k: int, nbuck: int):
     """(key, urls_pdf) → the bucket's filter row folded from empty over
     exactly those urls (n = their count). Rebucket builds every bucket
-    with it; the bloom removal rebuilds the touched buckets from their
-    survivors (no survivors → an empty bitmap, n = 0)."""
+    with it, a fresh store's first `add` builds the touched buckets, and
+    the bloom removal rebuilds the touched buckets from their survivors
+    (no survivors → an empty bitmap, n = 0)."""
     def build(key, urls_pdf):
         return pd.DataFrame({
             "bucket": [key[0]],
@@ -181,9 +187,7 @@ class SeenSet:
         commits both stamp it). Driver-side manifest walk — no data
         read. Returns True if a persisted spec was found."""
         t = self.seen_tbl
-        if not t.exists():
-            return False
-        for v in sorted(t.versions(), reverse=True):
+        for v in reversed(t.versions()):
             mm = t.meta(v).get("metrics") or {}
             if "partitions" in mm:
                 self.partitions = int(mm["partitions"])
@@ -264,9 +268,10 @@ class SeenSet:
         version `v` since the last 'full' (compaction) snapshot. The
         resolve is a max_by over ≤ P × chain-length tiny rows — nothing
         like the 12 GiB full-rewrite round 2 paid per round."""
-        if not self.filter_tbl.exists():
+        live = self.filter_tbl.chain()
+        if not live:
             return None
-        chain = self.filter_tbl.read_chain()
+        chain = self.filter_tbl.scan(live)
         return (chain.groupBy("bucket")
                 .agg(F.max_by(F.struct("bitmap", "n"), F.col("v")).alias("_b"),
                      F.max("v").alias("v"))
@@ -371,7 +376,10 @@ class SeenSet:
             new_urls = add_df.select("bucket", "url")
             filt = self._filter_df()
             if filt is None:
-                filt = self.spark.createDataFrame([], FILTER_ROW_SCHEMA)
+                # no filter yet: every touched bucket folds from empty
+                folded = (new_urls.groupBy("bucket")
+                          .applyInPandas(_build_kernel(kind, m, k, nbuck),
+                                         schema=FILTER_SCHEMA))
             else:
                 # DELTA commit: fold (and re-emit) ONLY buckets that
                 # received new URLs this round. Round 2 cogrouped the
@@ -381,9 +389,9 @@ class SeenSet:
                 # their old snapshot files and win via max_by(v) on read.
                 filt = filt.join(new_urls.select("bucket").distinct(),
                                  "bucket", "left_semi")
-            folded = (new_urls.groupBy("bucket")
-                      .cogroup(filt.drop("v").groupBy("bucket"))
-                      .applyInPandas(fold, schema=FILTER_SCHEMA))
+                folded = (new_urls.groupBy("bucket")
+                          .cogroup(filt.drop("v").groupBy("bucket"))
+                          .applyInPandas(fold, schema=FILTER_SCHEMA))
             versions.update(self._commit_filter(folded, round_no))
         return versions
 

@@ -85,8 +85,13 @@ class SnapshotTable:
         # overwriting each other's parquet dir + manifest (version gaps
         # are fine: chain/read walk existing manifests, never N±1
         # arithmetic). A claim whose commit crashed is cleaned by
-        # remove_orphans; readers ignore claims.
-        version = (self.latest_version() or 0) + 1
+        # remove_orphans; readers ignore claims. One listing per commit:
+        # the manifest's parent is the newest version that listing saw,
+        # so it is always below the claimed version even when a rival
+        # writer commits while this one writes.
+        vs = self.versions()
+        parent = vs[-1] if vs else None
+        version = (parent or 0) + 1
         while True:
             claim = os.path.join(self.snap_dir, f".claim.v{version}")
             try:
@@ -109,7 +114,7 @@ class SnapshotTable:
             "table": self.name,
             "version": version,
             "round": round_no,
-            "parent": self.latest_version(),
+            "parent": parent,
             "kind": kind,
             "path": path,
             "files": sorted(files),
@@ -181,12 +186,12 @@ class SnapshotTable:
         compaction (`compact_chain`) bounds the chain length."""
         return self.scan(self.chain(version))
 
-    def chain_base_round(self, version: int | None = None) -> int:
-        """Round of the 'full' snapshot the live chain is based on
-        (-1 when the chain starts from empty) — lets a reader subtract
-        only the deltas that postdate the base (the frontier's
-        merge-on-read bookkeeping)."""
-        live = self.chain(version)
+    @staticmethod
+    def base_round(live: list[dict]) -> int:
+        """Round of the 'full' snapshot the chain `live` (as `chain`
+        returns it) is based on (-1 when it starts from empty) — lets a
+        reader subtract only the deltas that postdate the base (the
+        frontier's merge-on-read bookkeeping)."""
         if live and live[0].get("kind") == "full":
             return live[0]["round"]
         return -1

@@ -33,6 +33,7 @@ in-degrees, self-loops dropped).
 
 from __future__ import annotations
 
+import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from .analytics import t
@@ -443,8 +444,8 @@ def bfs_depth(spark: SparkSession, seeds: DataFrame, edges: DataFrame,
 
 def q_host_bfs_depth(spark, sf_dir):
     e = host_edges(spark, sf_dir)
-    seeds = spark.createDataFrame(
-        [(int(s),) for s in BFS_SEEDS], "host bigint")
+    seeds = spark.createDataFrame(pd.DataFrame({"host": BFS_SEEDS}),
+                                  "host bigint")
     return bfs_depth(spark, seeds, e)
 
 

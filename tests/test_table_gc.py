@@ -142,3 +142,28 @@ class TestCommitClaims:
             x.join()
         assert len(set(got)) == 2                        # distinct versions
         assert t.read_chain().count() == 11              # nothing lost
+
+    def test_parent_stays_below_the_claimed_version(self, spark, tmp_path,
+                                                    monkeypatch):
+        """A rival writer that commits while this one writes its parquet
+        cannot make the manifest's parent point past its own version."""
+        import os
+
+        from ccspark import tables
+        store = tables.SnapshotStore(spark, str(tmp_path / "s3"))
+        t = store.table("t")
+        t.commit(spark.range(3), 0)                      # v1
+        rival = tables.SnapshotTable(spark, store.root, "t")
+        real_walk = os.walk
+
+        def walk(path, *a, **kw):
+            # runs once, between t's parquet write and its manifest
+            monkeypatch.setattr(os, "walk", real_walk)
+            assert rival.commit(spark.range(2), 0) == 3  # v2 is claimed
+            return real_walk(path, *a, **kw)
+
+        monkeypatch.setattr(os, "walk", walk)
+        assert t.commit(spark.range(4), 1) == 2
+        assert t.meta(2)["parent"] == 1
+        assert t.meta(3)["parent"] == 1
+        assert t.read_chain().count() == 9
